@@ -1,25 +1,42 @@
-"""The micro-batch apply path: dedup -> guard -> copy-on-write MERGE.
+"""The micro-batch apply path: one bucket shuffle per micro-batch.
 
 This is the Spark rebuild of the reference's task chain
 ``task_find_new_records -> task_read_records -> task_merge_metadata ->
 update_storage`` (tasks.py:34-119, app.py:24-74) collapsed into one
-DataFrame plan executed per micro-batch inside ``foreachBatch``:
+DataFrame plan executed per micro-batch inside ``foreachBatch``.  The table
+is the last-writer-wins (LWW) state of the change log: per url, the max
+``(warc_ts, log_offset)`` event seen, unless a newer delete exists.  The
+plan Spark builds:
 
-1. **LWW dedup** of the batch per url (operators.lww — skew-safe partial
-   aggregation; explicit salting available).
-2. **Bucket pruning**: only the table buckets containing the batch's urls
-   are read and rewritten (the semantic twin of the reference's
-   changed-record short-circuit, tasks.py:52-64 — prune untouched data
-   before the expensive merge).
-3. **Stale filter**: a winner is applied only if (warc_ts, log_offset) is
-   strictly newer than the stored row (idempotent upsert, app.py:34-39).
-4. **Tombstone guard** against resurrection by stale events
-   (app.py:54-67).
-5. **HTML->text** extraction (vectorized pandas UDF) for applied upserts
-   only — never for losers.
-6. **Atomic commit** of rewritten buckets + tombstone audit appends +
-   per-partition lineage + the commit epoch, in one manifest flip
-   (exactly-once under foreachBatch replays).
+1. **Bucket pruning** (one narrow job): the table buckets holding the
+   batch's urls.  Only those are read and rewritten (the reference's
+   changed-record short-circuit, tasks.py:52-64).
+2. **Merge inputs**, all in the table's row schema plus a ``_kind`` tag:
+   the batch's LWW winner rows (:func:`lww_winner_rows`: an argmax over
+   the ordering keys, broadcast back to the events; explicit salting via
+   :func:`lww_dedup_salted` when ``salted``), the stored rows of the
+   touched buckets, and their tombstones reduced to the latest per url (a
+   partial aggregate, so a hot url's delete history never reaches one
+   task whole).
+3. **One payload shuffle**: ``repartition(n, _bucket)`` of the union, then
+   ``sortWithinPartitions(url, warc_ts desc, log_offset desc, _kind)``.
+   ``n`` follows the input bytes the driver already knows
+   (:func:`bucket_shuffle_width`): one wave for a tail batch, up to four
+   for bulk input.
+4. **One Arrow pass** (``mapInArrow``): the first row per url wins.  A
+   stored row is emitted unchanged; a winning batch upsert gets its
+   ``text`` extracted (HTML->text runs for applied upserts only); deletes
+   and tombstones emit nothing.  Ties sort stored rows first, so a
+   re-delivered event never rewrites its row, and a tombstone blocks every
+   older upsert, so no stale event resurrects a deleted url (app.py:34-39,
+   54-67).
+5. **Atomic commit** of the rewritten buckets (written as shuffled, no
+   second repartition) + tombstone audit appends + per-partition lineage +
+   the commit epoch, in one manifest flip (exactly-once under
+   foreachBatch replays).
+
+With no stored rows and no tombstones (a fresh table, a bulk replay) the
+same plan is the winner rows' single bucket shuffle and extraction pass.
 """
 
 from __future__ import annotations
@@ -34,116 +51,147 @@ from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
 from .evolve import align_to_schema, reconcile_schema
-from .functions.html import html_to_text
-from .lake.table import CommitConflictError, LakeTable, bucket_expr
-from .operators.cdc import tombstone_guard
-from .operators.lww import lww_dedup, lww_dedup_salted, lww_dedup_semi, lww_winner_rows
+from .lake.table import (
+    CommitConflictError,
+    LakeTable,
+    bucket_expr,
+    bucket_shuffle_width,
+    file_bytes,
+    input_bytes,
+)
+from .operators.lww import lww_dedup_salted, lww_winner_rows
 from .schema import LINEAGE_SCHEMA, OP_DELETE, TOMBSTONE_SCHEMA
 
+# not called here; kept importable from this module because perfbench's
+# per-layer tracer wraps these two names in it
+from .operators.cdc import tombstone_guard  # noqa: F401
+from .operators.lww import lww_dedup_semi  # noqa: F401
 
-def _text_after_html_fields(
-    fields: list[T.StructField], skip: str
-) -> list[T.StructField]:
-    """THE target-row field order: input fields minus ``skip``, with the
-    derived ``text`` column inserted right after ``html``.  One definition —
-    pages_schema_for and the fused bulk path's Arrow output schema must
-    agree on it exactly."""
-    out: list[T.StructField] = []
-    for f in fields:
-        if f.name == skip:
-            continue
-        out.append(f)
-        if f.name == "html":
-            out.append(T.StructField("text", T.StringType(), True))
-    return out
+#: ``_kind`` tags of the merge rows: a stored row, a delete (a batch delete
+#: or a stored tombstone; it wins by emitting nothing), a batch upsert.  On
+#: an equal (url, warc_ts, log_offset) the lower tag sorts first and wins.
+KIND_STORED, KIND_DELETE, KIND_UPSERT = 0, 1, 2
 
 
 def pages_schema_for(batch_schema: T.StructType) -> T.StructType:
     """Target row schema for a change-event schema: drop ``op``, add ``text``
     right after ``html`` (schema evolution on the stream flows through)."""
-    return T.StructType(_text_after_html_fields(batch_schema.fields, "op"))
+    out: list[T.StructField] = []
+    for f in batch_schema.fields:
+        if f.name == "op":
+            continue
+        out.append(f)
+        if f.name == "html":
+            out.append(T.StructField("text", T.StringType(), True))
+    return T.StructType(out)
 
 
-def _bulk_upserts(
-    batch_df: DataFrame,
-    key: str,
-    n_buckets: int,
-    target_schema: T.StructType,
-    cleanup: list,
-) -> DataFrame:
-    """Fresh-table bulk apply: winner rows -> ONE bucket-keyed payload shuffle
-    -> in-partition duplicate collapse + HTML->text in a single Arrow pass.
+def _first_per_key(key: str, out_cols: list[str]):
+    """The ``mapInArrow`` body of the merge: input is one bucket group,
+    sorted by (key, newest first, ``_kind``); output is the first row of
+    each key when it is a stored row (as is) or a batch upsert (with
+    ``text`` extracted).  The key comparison is vectorized; the last key of
+    each Arrow batch is carried into the next, so a key split across
+    batches still keeps only its first row."""
+    text_at, html_at = out_cols.index("text"), out_cols.index("html")
 
-    The general path pays two winner-payload shuffles (the LWW collapse keyed
-    by url, then the write's repartition keyed by bucket) plus a separate
-    Arrow round-trip for extraction.  But bucket = f(url), so one shuffle
-    keyed by bucket already co-locates every url's duplicate deliveries in
-    one partition — the collapse becomes a vectorized in-partition
-    ``drop_duplicates`` fused into the same ``mapInArrow`` pass that
-    extracts text.  Net: half the payload shuffle bytes, one Arrow hop.
-
-    Correct only when exact duplicates are the ONLY multiplicity left, i.e.
-    after :func:`lww_winner_rows` (winner rows share the max
-    (warc_ts, log_offset), and log_offset uniquely identifies an event, so
-    co-keyed rows are byte-identical deliveries — keeping any one is LWW).
-    """
-    winners = lww_winner_rows(
-        batch_df, key, cleanup=cleanup, unique_order_col="log_offset"
-    )
-    upserts = winners.filter(F.col("op") != OP_DELETE).drop("op")
-    # explicit partition count at 4 tasks/core: AQE's post-shuffle coalesce
-    # targets bytes-per-partition, which at this payload size lands a task
-    # count BELOW the core count's next multiple (measured: 5 tasks on 4
-    # cores = a full wave of 4 then a 1-task straggler wave, ~40% of the
-    # stage idle).  The extract stage is python-worker-bound, so wave
-    # balance — not bytes — is the binding constraint; 4x parallelism keeps
-    # the tail short at every cluster size and still amortizes per-task
-    # setup.  Cluster-scale: defaultParallelism = total executor cores.
-    # NOTE: the repartition hashes on _bucket, so the number of NON-EMPTY
-    # partitions is bounded by min(n_parts, n_buckets) — n_parts beyond
-    # n_buckets buys nothing; size n_buckets >= cores*4 to keep waves full.
-    n_parts = max(upserts.sparkSession.sparkContext.defaultParallelism * 4, 8)
-    tagged = upserts.withColumn("_bucket", bucket_expr(key, n_buckets)).repartition(
-        n_parts, F.col("_bucket")
-    )
-
-    out_fields = _text_after_html_fields(tagged.schema.fields, "_bucket")
-    out_schema = T.StructType(out_fields)
-    out_cols = [f.name for f in out_fields]
-
-    def _collapse_and_extract(it: "Iterator") -> "Iterator":
-        # mapInArrow, not mapInPandas: the row payload (html binary, text)
-        # stays in Arrow buffers end-to-end — a pandas pass materialized
-        # every html as a Python bytes object and every text as a Python
-        # str TWICE (in and out), the dominant python-side cost of this
-        # stage.  Only the ~30-byte urls are materialized, for the
-        # cross-batch duplicate collapse.
+    def run(it: "Iterator") -> "Iterator":
         import pyarrow as pa
+        import pyarrow.compute as pc
 
         from .functions.html import extract_text_arrow
 
-        seen: set = set()  # urls of THIS partition only (one bucket group)
+        prev = None
         for batch in it:
-            urls = batch.column(batch.schema.get_field_index(key)).to_pylist()
-            mask = []
-            for u in urls:
-                if u in seen:
-                    mask.append(False)
-                else:
-                    seen.add(u)
-                    mask.append(True)
-            fresh = batch.filter(pa.array(mask, type=pa.bool_()))
-            if fresh.num_rows == 0:
+            n = batch.num_rows
+            if n == 0:
                 continue
-            cols = {name: fresh.column(fresh.schema.get_field_index(name))
-                    for name in fresh.schema.names}
-            cols["text"] = extract_text_arrow(cols["html"])
-            yield pa.RecordBatch.from_arrays(
-                [cols[name] for name in out_cols], names=out_cols
+            keys = batch.column(batch.schema.get_field_index(key))
+            head = pa.array([prev is None or keys[0].as_py() != prev])
+            first = pa.concat_arrays(
+                [head, pc.not_equal(keys.slice(1), keys.slice(0, n - 1))]
             )
+            prev = keys[n - 1].as_py()
+            kind = batch.column(batch.schema.get_field_index("_kind"))
+            stored = batch.filter(pc.and_(first, pc.equal(kind, KIND_STORED)))
+            if stored.num_rows:
+                yield stored.select(out_cols)
+            ups = batch.filter(pc.and_(first, pc.equal(kind, KIND_UPSERT)))
+            if ups.num_rows:
+                ups = ups.select(out_cols)
+                cols = list(ups.columns)
+                cols[text_at] = extract_text_arrow(ups.column(html_at))
+                # same field flags as the stored rows' batches: one stream
+                # carries one schema
+                yield pa.RecordBatch.from_arrays(cols, schema=ups.schema)
 
-    final = tagged.mapInArrow(_collapse_and_extract, out_schema)
-    return align_to_schema(final, target_schema)
+    return run
+
+
+def _merged_rows(
+    table: LakeTable,
+    m: dict,
+    resolved: DataFrame,
+    touched: list[int],
+    evolved: T.StructType,
+    salted: bool,
+    n_salts: int,
+    with_tombstones: bool,
+    cleanup: list,
+) -> DataFrame:
+    """The rows the touched buckets hold after this batch, tagged with
+    ``_kind`` (stored or applied upsert), shuffled by ``_bucket``: batch
+    winners, stored rows and reduced tombstones through ONE bucket shuffle
+    and ONE Arrow pass (steps 2-4 of the module docstring)."""
+    key, nb = m["key"], m["n_buckets"]
+    mschema = T.StructType(
+        evolved.fields + [T.StructField("_kind", T.ByteType(), False)]
+    )
+
+    def tagged(df: DataFrame, kind) -> DataFrame:
+        return align_to_schema(df.withColumn("_kind", kind.cast("byte")), mschema)
+
+    if salted:
+        winners = lww_dedup_salted(resolved, key, n_salts=n_salts)
+    else:
+        winners = lww_winner_rows(
+            resolved, key, cleanup=cleanup, unique_order_col="log_offset"
+        )
+    # a NULL op is no upsert: like a delete it replaces, and emits nothing
+    parts = [tagged(winners, F.when(F.col("op") != OP_DELETE, KIND_UPSERT)
+                    .otherwise(KIND_DELETE))]
+    stored_files = [e["path"] for b in touched for e in m["buckets"].get(str(b), [])]
+    if stored_files:
+        parts.append(tagged(table.read_buckets(touched, m), F.lit(KIND_STORED)))
+    if with_tombstones and m["tombstone_files"]:
+        tombs = table.read_tombstones(TOMBSTONE_SCHEMA, m).withColumnRenamed("url", key)
+        if len(touched) < nb:
+            tombs = tombs.filter(bucket_expr(key, nb).isin(touched))
+        latest = F.max(F.struct("deleted_ts", "log_offset")).alias("_t")
+        tombs = tombs.groupBy(key).agg(latest).select(
+            key,
+            F.col("_t.deleted_ts").alias("warc_ts"),
+            F.col("_t.log_offset").alias("log_offset"),
+        )
+        parts.append(tagged(tombs, F.lit(KIND_DELETE)))
+    merged = parts[0]
+    for p in parts[1:]:
+        merged = merged.union(p)
+
+    width = bucket_shuffle_width(
+        resolved.sparkSession,
+        input_bytes(resolved) + file_bytes(stored_files),
+        len(touched),
+    )
+    shuffled = (
+        merged.withColumn("_bucket", bucket_expr(key, nb))
+        .repartition(width, F.col("_bucket"))
+        .sortWithinPartitions(
+            key, F.col("warc_ts").desc(), F.col("log_offset").desc(), "_kind"
+        )
+    )
+    out_cols = [f.name for f in mschema.fields]
+    return shuffled.mapInArrow(_first_per_key(key, out_cols), mschema)
 
 
 def apply_batch(
@@ -153,8 +201,6 @@ def apply_batch(
     epoch_source: str = "cdc",
     salted: bool = False,
     n_salts: int = 16,
-    merge_partitions: int | None = None,
-    dedup_strategy: str = "semi",
     prune_buckets: bool = True,
     compact_appends_every: int = 32,
     decision_col: str | None = None,
@@ -164,23 +210,21 @@ def apply_batch(
     re-delivery of an already-committed batch_id is a no-op.
 
     ``decision_col`` names a pre-resolution column (the stateful in-stream
-    LWW operator's ``decision``): only rows marked ``'apply'`` are applied,
-    and — because the state store already guarantees each such row is
-    strictly newer than everything previously seen for its url — the
-    stale-filter and tombstone-guard joins against the stored table are
-    skipped entirely (the operator's whole point: per-batch work stays
-    proportional to the batch, not the table).  The tombstone audit still
-    sees EVERY delete delivery, resolved or not (reference app.py:15-21
-    appends every delete).
+    LWW operator's ``decision``): only rows marked ``'apply'`` enter the
+    merge, and — because the state store already saw every delete for
+    their urls — the tombstone read is skipped (per-batch tombstone work
+    stays proportional to the batch, not the table's delete history).  The
+    tombstone audit still sees EVERY delete delivery, resolved or not
+    (reference app.py:15-21 appends every delete).
 
-    ``keep_applied``: when a list is passed, the applied-upserts frame
-    (post stale-filter/guard, WITH extracted ``text``) is persisted and
-    appended to it instead of being torn down — the caller owns the
-    unpersist.  A derived-index maintainer (update_lsh_index) can then
+    ``keep_applied``: when a list is passed, the merge output is persisted
+    (the write job materializes it) and two frames are appended: first the
+    applied upserts WITH their extracted ``text``, then the persisted merge
+    output they are filtered from.  The caller owns the unpersist of every
+    element.  A derived-index maintainer (update_lsh_index) can then
     consume the rows this batch actually applied at O(batch) cost with no
-    table read-back and no second HTML->text extraction: the write job
-    materializes the cache, the index reads it.  Empty when the batch was
-    an epoch no-op (caller falls back to a table read for that
+    table read-back and no second HTML->text extraction.  Empty when the
+    batch was an epoch no-op (caller falls back to a table read for that
     crash-recovery case)."""
     if batch_id <= table.last_epoch(epoch_source):
         return {"batch_id": batch_id, "skipped": True}
@@ -195,10 +239,9 @@ def apply_batch(
     m = table.manifest()
     key, nb = m["key"], m["n_buckets"]
     # batch_df is deliberately NOT cached: its passes (touched discovery,
-    # lineage stats, dedup, tombstone scan) each prune to a few columns, so
-    # columnar re-reads from the source beat materializing full rows on heap
+    # lineage stats, winners, tombstone audit) each prune to a few columns,
+    # so columnar re-reads from the source beat materializing full rows
     _caches: list = []
-    persisted: list = []
     try:
         _mark("manifest_read")  # time since t0: the manifest open above
 
@@ -210,11 +253,9 @@ def apply_batch(
             else batch_df
         )
 
-        # 1. bucket pruning: which table buckets does this batch touch?
-        #    Discovered from the RAW batch (same distinct url set as the
-        #    dedup output — a narrow url-column scan, so the deduped payload
-        #    never needs persisting just for discovery).  A bulk replay
-        #    touches every bucket anyway — prune_buckets=False skips the job.
+        # bucket pruning: which table buckets does this batch touch?  A
+        # narrow url-column scan of the raw batch; a bulk replay touches
+        # every bucket anyway — prune_buckets=False skips the job.
         if prune_buckets:
             touched = [
                 r[0]
@@ -222,118 +263,35 @@ def apply_batch(
             ]
         else:
             touched = list(range(nb))
-        # manifest-level emptiness: a fresh table / bulk first replay has no
-        # stored rows and no tombstones — skip the stale-filter and guard
-        # joins outright instead of shuffling every winner (wide rows!)
-        # against provably-empty sides.  With pre-resolved rows the state
-        # store already proved strictly-newer, so both joins are skipped
-        # even against a populated table.
-        has_current = any(m["buckets"].get(str(b)) for b in touched)
         has_tombs = bool(m["tombstone_files"])
-        need_stale_filter = has_current and not decision_col
-        need_guard = has_tombs and not decision_col
         evolved = reconcile_schema(table.schema(m), pages_schema_for(resolved.schema))
         _mark("dedup_and_touched")
 
-        if (
-            not has_current
-            and not need_guard
-            and not salted
-            and dedup_strategy == "semi"
-            and not merge_partitions
-        ):
-            # FUSED bulk path: no stored rows and no guard means the
-            # stale filter and guard are provably no-ops — winner rows go
-            # through one bucket-keyed shuffle with the duplicate collapse
-            # and text extraction fused into a single Arrow pass.  Passed
-            # as a thunk: the winner-offset collect inside it (a full
-            # narrow scan) then runs in overwrite_buckets' pool thread,
-            # overlapping the tombstone/lineage append jobs.
-            if keep_applied is not None:
-                def new_data() -> DataFrame:
-                    df = _bulk_upserts(resolved, key, nb, evolved, _caches)
-                    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-                    keep_applied.append(df)
-                    return df
-            else:
-                new_data = lambda: _bulk_upserts(resolved, key, nb, evolved, _caches)  # noqa: E731
-            pre_partitioned = True
-        else:
-            pre_partitioned = False
-            # 2. in-batch LWW dedup (explicit salting optional per
-            #    north_rule).  'semi' shuffles ordering keys only (payloads
-            #    of losing events never move).
-            if salted:
-                dedup = lww_dedup_salted(resolved, key, n_salts=n_salts)
-            elif dedup_strategy == "semi":
-                dedup = lww_dedup_semi(
-                    resolved, key, cleanup=_caches, unique_order_col="log_offset"
-                )
-            else:
-                dedup = lww_dedup(resolved, key)
-            if merge_partitions:
-                dedup = dedup.repartition(merge_partitions, key)
-
-            current = align_to_schema(table.read_buckets(touched, m), evolved)
-
-            # 3. stale filter: strictly-newer-than-stored (struct comparison
-            #    is lexicographic on (warc_ts, log_offset) — the LWW order)
-            if need_stale_filter:
-                stored = current.select(
-                    F.col(key),
-                    F.struct(F.col("warc_ts").alias("ts"), F.col("log_offset").alias("off")).alias("_stored"),
-                )
-                j = dedup.join(stored, key, "left")
-                newer = F.col("_stored").isNull() | (
-                    F.struct(F.col("warc_ts").alias("ts"), F.col("log_offset").alias("off")) > F.col("_stored")
-                )
-                appliable = j.filter(newer).drop("_stored")
-            else:
-                appliable = dedup
-
-            # 4. resurrection guard vs prior-batch tombstones.  Tombstones
-            #    are pruned to the batch's touched buckets first: the guard
-            #    then joins against a slice proportional to the batch, not
-            #    the table's whole delete history (strategy left to AQE).
-            if need_guard:
-                tombs = table.read_tombstones(TOMBSTONE_SCHEMA).withColumnRenamed("deleted_ts", "warc_ts")
-                if prune_buckets and len(touched) < nb:
-                    tombs = tombs.filter(bucket_expr(key, nb).isin(touched))
-                appliable = tombstone_guard(appliable, tombs, key)
-            if has_current:
-                # two consumers ahead (anti-join keys + upsert projection)
-                # whenever stored rows exist — including the decision-col
-                # path, where appliable IS dedup (the state store already
-                # proved strictly-newer) but the winner join would still
-                # re-run once per consumer without the cache.  Without
-                # stored rows there is only the upsert path — no cache.
-                appliable = appliable.persist(StorageLevel.MEMORY_AND_DISK)
-                persisted.append(appliable)
-
-            applied_keys = appliable.select(key)
-            upserts = (
-                appliable.filter(F.col("op") != OP_DELETE)
-                .withColumn("text", html_to_text(F.col("html")))
+        # Passed as a thunk: the merge's eager work (the winner-offset
+        # measure inside lww_winner_rows when footers give no bound) then
+        # runs in overwrite_buckets' pool thread, overlapping the
+        # tombstone/lineage append jobs.
+        def new_data() -> DataFrame:
+            merged = _merged_rows(
+                table, m, resolved, touched, evolved, salted, n_salts,
+                with_tombstones=not decision_col, cleanup=_caches,
             )
-            upserts = align_to_schema(upserts, evolved)
             if keep_applied is not None:
-                upserts = upserts.persist(StorageLevel.MEMORY_AND_DISK)
-                keep_applied.append(upserts)
+                merged = merged.persist(StorageLevel.MEMORY_AND_DISK)
+                keep_applied.append(
+                    merged.filter(F.col("_kind") == KIND_UPSERT).drop("_kind")
+                )
+                keep_applied.append(merged)
+            return merged.drop("_kind")
 
-            # 5. copy-on-write: survivors of touched buckets + applied upserts
-            if has_current:
-                new_data = current.join(applied_keys, key, "left_anti").unionByName(upserts)
-            else:
-                new_data = upserts
-
-        # 6. tombstone audit: every delete event in the batch (reference
-        #    app.py:15-21 appends every delete to change_log).  Anti-join
-        #    against already-stored tombstones so a duplicate delivery that
-        #    lands in a *different* micro-batch than its original does not
-        #    append a second (url, ts, offset) row — the audit log stays a
-        #    distinct set, matching replay_oracle's semantics exactly.
-        #    Passed as a THUNK: its driver-side plan construction runs in
-        #    overwrite_buckets' pool thread, overlapped with the main write.
+        # tombstone audit: every delete event in the batch (reference
+        # app.py:15-21 appends every delete to change_log).  Anti-join
+        # against already-stored tombstones so a duplicate delivery that
+        # lands in a *different* micro-batch than its original does not
+        # append a second (url, ts, offset) row — the audit log stays a
+        # distinct set, matching replay_oracle's semantics exactly.  Passed
+        # as a THUNK: its driver-side plan construction runs in
+        # overwrite_buckets' pool thread, overlapped with the main write.
         def _tomb_appends() -> DataFrame:
             t = (
                 batch_df.filter(F.col("op") == OP_DELETE)
@@ -347,7 +305,7 @@ def apply_batch(
             )
             if has_tombs:
                 t = t.join(
-                    table.read_tombstones(TOMBSTONE_SCHEMA).select(
+                    table.read_tombstones(TOMBSTONE_SCHEMA, m).select(
                         "url", "deleted_ts", "log_offset"
                     ),
                     ["url", "deleted_ts", "log_offset"],
@@ -391,9 +349,9 @@ def apply_batch(
             new_schema=evolved,
             tombstone_appends=_tomb_appends,
             lineage_appends=_lineage_df,
-            pre_partitioned=pre_partitioned,
+            pre_partitioned=True,
             # revalidation parent = the snapshot THIS batch's plan read at
-            # its top (bucket pruning, has_current, epochs all came from it)
+            # its top (bucket pruning, stored rows, epochs all came from it)
             parent_version=m["version"],
         )
         _mark("commit_write")
@@ -422,7 +380,7 @@ def apply_batch(
             "committed_at": datetime.now(timezone.utc).isoformat(),
         }
     finally:
-        for _c in persisted + _caches:
+        for _c in _caches:
             try:
                 _c.unpersist()
             except Exception:

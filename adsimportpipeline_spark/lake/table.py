@@ -163,6 +163,52 @@ def bucket_expr(key_col: str, n_buckets: int):
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
 
 
+#: on-disk (zstd parquet) input bytes one bucket-shuffle task should get
+#: before a second wave pays for itself.  A Python task of the apply pass
+#: costs ~0.25 s whatever its row count, so a stage with less than a
+#: wave's worth of this runs best as ONE wave.
+_TASK_INPUT_BYTES = 4 << 20
+
+
+def file_bytes(paths) -> int:
+    """Summed size of local files (a path that cannot be stat'ed counts 0):
+    the input-size signal the driver already has without running a job."""
+    total = 0
+    for p in paths:
+        try:
+            total += os.path.getsize(p)
+        except OSError:
+            pass
+    return total
+
+
+def input_bytes(df: DataFrame) -> int:
+    """The optimizer's size estimate of ``df`` (no job, no data read): the
+    scanned files' bytes for a file scan, and for a ``foreachBatch`` micro-
+    batch the stats its source plan carried in (the batch is an opaque
+    ``LogicalRDD`` whose ``inputFiles`` is empty).  0 when the plan has no
+    estimate (Spark's default of ~2^63 means "unknown")."""
+    from py4j.protocol import Py4JError
+
+    try:
+        n = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    except (Py4JError, AttributeError):  # no JVM plan (e.g. Spark Connect)
+        return 0
+    return n if n < (1 << 62) else 0
+
+
+def bucket_shuffle_width(spark: SparkSession, n_bytes: int, n_buckets: int) -> int:
+    """Partition count for a payload shuffle keyed on ``_bucket``: one wave
+    (``defaultParallelism``) until the input exceeds a wave's worth of
+    :data:`_TASK_INPUT_BYTES`, at most four waves for bulk input, and never
+    more than ``n_buckets`` (a hash on ``_bucket`` fills at most that many
+    partitions).  An explicit count also keeps AQE from coalescing a small
+    write to a single task."""
+    dp = max(spark.sparkContext.defaultParallelism, 1)
+    waves = min(4, max(1, -(-n_bytes // (dp * _TASK_INPUT_BYTES))))
+    return max(1, min(dp * waves, n_buckets))
+
+
 class LakeTable:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -623,8 +669,8 @@ class LakeTable:
             df = df.filter(F.col(col) <= F.lit(hi).cast(dt))
         return df
 
-    def read_tombstones(self, tomb_schema: T.StructType) -> DataFrame:
-        m = self.manifest()
+    def read_tombstones(self, tomb_schema: T.StructType, m: dict | None = None) -> DataFrame:
+        m = m or self.manifest()
         paths = [e["path"] for e in m["tombstone_files"]]
         if not paths:
             return self.spark.createDataFrame([], tomb_schema)
@@ -657,6 +703,40 @@ class LakeTable:
             for f in os.listdir(base)
             if f.endswith(".parquet")
         )
+
+    def _write_bucketed(
+        self,
+        df: DataFrame,
+        key: str,
+        n_buckets: int,
+        tag: str,
+        sort_cols: list[str],
+        pre_partitioned: bool = False,
+    ) -> dict[int, list[str]]:
+        """THE bucketed write: tag rows with their bucket, shuffle them by
+        bucket (skipped when ``pre_partitioned``) so each bucket is written
+        by one task, sort within partitions by ``sort_cols``, write one
+        ``_bucket=b`` directory per bucket, and return bucket -> files.
+        The shuffle width is :func:`bucket_shuffle_width` of ``df``'s
+        :func:`input_bytes`."""
+        d = os.path.join(self.root, "data", f"{tag}-{uuid.uuid4().hex[:12]}")
+        tagged = df.withColumn("_bucket", bucket_expr(key, n_buckets))
+        if not pre_partitioned:
+            width = bucket_shuffle_width(self.spark, input_bytes(df), n_buckets)
+            tagged = tagged.repartition(width, F.col("_bucket"))
+        if sort_cols:
+            # in-partition sort only — no extra shuffle; tightens
+            # row-group stats so pushed predicates skip within files
+            tagged = tagged.sortWithinPartitions("_bucket", *sort_cols)
+        tagged.write.mode("overwrite").partitionBy("_bucket").parquet(d)
+        # one listdir of the commit dir instead of one per bucket: 128+
+        # buckets = 128 serial listdir calls (~100ms of commit tail)
+        by_bucket: dict[int, list[str]] = {}
+        if os.path.isdir(d):
+            for sub in os.listdir(d):
+                if sub.startswith("_bucket="):
+                    by_bucket[int(sub.split("=", 1)[1])] = self._parquet_files(d, sub)
+        return by_bucket
 
     def _ensure_stats_friendly_writes(self, stats_cols: list[str]) -> None:
         """Stats tables need footer min/max on every recorded column:
@@ -695,10 +775,9 @@ class LakeTable:
         commit epoch — all in one atomic manifest flip.
 
         ``pre_partitioned=True`` asserts the caller already shuffled
-        ``new_data`` so each url's rows are co-located by
-        ``bucket_expr(key, n_buckets)`` (the fused bulk apply path does);
-        the write then skips its own repartition — no second payload
-        shuffle.
+        ``new_data`` so each bucket's rows are co-located by
+        ``bucket_expr(key, n_buckets)`` (the apply path's merge does); the
+        write then skips its own repartition — no second payload shuffle.
 
         ``new_data`` may be a CALLABLE returning the DataFrame: plan
         construction then happens inside the main write's pool thread, so
@@ -727,35 +806,28 @@ class LakeTable:
             m["current_schema_id"] = sid
         sid = m["current_schema_id"]
 
-        # write new bucket data partitioned by bucket dir; repartition by
-        # bucket first so each bucket's rows colocate in few tasks (without
-        # this every task writes a sliver of every bucket -> tasks x buckets
-        # tiny files).  The three independent writes (data, tombstones,
-        # lineage) are submitted as CONCURRENT Spark jobs — the scheduler
-        # interleaves their tasks, so the small appends ride along instead of
-        # serializing after the big write (atomicity is unaffected: nothing
-        # is visible until the single manifest flip below).
-        d = os.path.join(self.root, "data", f"c-{uuid.uuid4().hex[:12]}")
-
+        # write new bucket data partitioned by bucket dir (each bucket's rows
+        # colocated in one task, else every task writes a sliver of every
+        # bucket -> tasks x buckets tiny files).  The three independent
+        # writes (data, tombstones, lineage) are submitted as CONCURRENT
+        # Spark jobs — the scheduler interleaves their tasks, so the small
+        # appends ride along instead of serializing after the big write
+        # (atomicity is unaffected: nothing is visible until the single
+        # manifest flip below).
         sort_cols = m.get("sort_cols") or []
+        results: dict = {}
 
         def _write_main() -> None:
             df = new_data() if callable(new_data) else new_data
-            tagged = df.withColumn("_bucket", bucket_expr(key, nb))
-            if not pre_partitioned:
-                tagged = tagged.repartition(F.col("_bucket"))
-            if sort_cols:
-                # in-partition sort only — no extra shuffle; tightens
-                # row-group stats so pushed predicates skip within files
-                tagged = tagged.sortWithinPartitions("_bucket", *sort_cols)
-            tagged.write.mode("overwrite").partitionBy("_bucket").parquet(d)
+            results["data"] = self._write_bucketed(
+                df, key, nb, "c", sort_cols, pre_partitioned=pre_partitioned
+            )
 
         # repartition(1), not coalesce(1): coalesce would collapse the whole
         # upstream distinct/aggregation into a single task; repartition keeps
         # the computation parallel and only funnels the (small) result to one
         # output file
         jobs = [_write_main]
-        results: dict[str, str] = {}
         if tombstone_appends is not None:
             # appends may be CALLABLES like new_data: their (driver-side)
             # plan construction then runs in the pool thread, overlapped
@@ -784,13 +856,7 @@ class LakeTable:
         else:
             jobs[0]()
 
-        # one listdir of the commit dir instead of one per bucket: 128+
-        # buckets = 128 serial listdir calls (~100ms of commit tail)
-        by_bucket: dict[int, list[str]] = {}
-        if os.path.isdir(d):
-            for sub in os.listdir(d):
-                if sub.startswith("_bucket="):
-                    by_bucket[int(sub.split("=", 1)[1])] = self._parquet_files(d, sub)
+        by_bucket = results["data"]
         for b in touched_buckets:
             files = by_bucket.get(b, [])
             m["buckets"][str(b)] = [self._data_entry(p, sid, stats_cols) for p in files]
@@ -841,18 +907,9 @@ class LakeTable:
             return m["version"]
         key, nb = m["key"], m["n_buckets"]
         self._ensure_stats_friendly_writes(m.get("stats_cols") or [])
-        d = os.path.join(self.root, "data", f"a-{uuid.uuid4().hex[:12]}")
-        tagged = new_data.withColumn("_bucket", bucket_expr(key, nb)).repartition(
-            F.col("_bucket")
+        by_bucket = self._write_bucketed(
+            new_data, key, nb, "a", m.get("sort_cols") or []
         )
-        if m.get("sort_cols"):
-            tagged = tagged.sortWithinPartitions("_bucket", *m["sort_cols"])
-        tagged.write.mode("overwrite").partitionBy("_bucket").parquet(d)
-        by_bucket: dict[int, list[str]] = {}
-        if os.path.isdir(d):
-            for sub in os.listdir(d):
-                if sub.startswith("_bucket="):
-                    by_bucket[int(sub.split("=", 1)[1])] = self._parquet_files(d, sub)
         # stats are a property of the (immutable) files: compute once,
         # reuse across CAS retries
         stats_cols = m.get("stats_cols") or []
@@ -946,24 +1003,15 @@ class LakeTable:
             data = self.read()
             key = m["key"]
             sid = m["current_schema_id"]
-            self._ensure_stats_friendly_writes(m.get("stats_cols") or [])
-            d = os.path.join(self.root, "data", f"r-{uuid.uuid4().hex[:12]}")
-            tagged = data.withColumn(
-                "_bucket", bucket_expr(key, new_n_buckets)
-            ).repartition(F.col("_bucket"))
-            if m.get("sort_cols"):
-                tagged = tagged.sortWithinPartitions("_bucket", *m["sort_cols"])
-            tagged.write.mode("overwrite").partitionBy("_bucket").parquet(d)
             stats_cols = m.get("stats_cols") or []
-            buckets: dict[str, list[dict]] = {}
-            if os.path.isdir(d):
-                for sub in os.listdir(d):
-                    if sub.startswith("_bucket="):
-                        buckets[sub.split("=", 1)[1]] = [
-                            self._data_entry(p, sid, stats_cols)
-                            for p in self._parquet_files(d, sub)
-                        ]
-            m["buckets"] = buckets
+            self._ensure_stats_friendly_writes(stats_cols)
+            by_bucket = self._write_bucketed(
+                data, key, int(new_n_buckets), "r", m.get("sort_cols") or []
+            )
+            m["buckets"] = {
+                str(b): [self._data_entry(p, sid, stats_cols) for p in files]
+                for b, files in by_bucket.items()
+            }
             m["n_buckets"] = int(new_n_buckets)
             m["version"] = parent + 1
             try:

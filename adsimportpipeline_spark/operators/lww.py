@@ -315,10 +315,10 @@ def lww_dedup_semi(
     (rows sharing (key, order_cols) are identical payloads by the log's
     offset-uniqueness, so any winner among them is THE winner).
 
-    Callers that already need a payload shuffle downstream (e.g. the bulk
+    Callers that already need a payload shuffle downstream (e.g. the
     apply path repartitioning by storage bucket) should take
     :func:`lww_winner_rows` and fold the duplicate-collapse into that
-    shuffle instead of paying this one — see ``apply._bulk_upserts``.
+    shuffle instead of paying this one — see ``apply._merged_rows``.
     """
     matched = lww_winner_rows(
         df,

@@ -2044,7 +2044,7 @@ FROM winners WHERE op <> 'delete'
 def q_cdc_apply_replay(spark, sf_dir):
     """END-TO-END apply-path check: replay the events-derived change log as
     one micro-batch through apply_batch into a fresh LakeTable (LWW dedup,
-    tombstone audit, stale filter, copy-on-write commit), then read the
+    tombstone audit, bucket merge, copy-on-write commit), then read the
     committed final state back.  Same oracle shape as the flagship — the
     oracle verifies the *storage engine*, not just the expression.
 
@@ -2077,8 +2077,8 @@ def q_snapshot_changelog(spark, sf_dir):
     LakeTable.read_changes (Delta CDF / Iceberg changelog-scan analog).
     The oracle recomputes both endpoint LWW states in SQL and classifies
     insert/update/delete with a full-outer join — so one row verifies both
-    the incremental apply path (batch 2's stale-filter + tombstone-guard
-    semantics against batch 1's COMMITTED state, not a single-batch replay)
+    the incremental apply path (batch 2's merge against batch 1's
+    COMMITTED rows and tombstones, not a single-batch replay)
     and the snapshot-diff changelog reader."""
     from ..apply import apply_batch, pages_schema_for
     from ..lake.table import LakeTable

@@ -120,9 +120,9 @@ def run_replay_stateful(
 ) -> StreamingQuery | None:
     """State-store replay mode: LWW resolved IN-STREAM with
     ``applyInPandasWithState`` (per-url high-water mark as streaming state),
-    the sink applying only 'apply' rows — no stale-filter or tombstone-guard
-    joins against the stored table, so per-batch work stays proportional to
-    the batch rather than the table (the operator's whole point).
+    the sink applying only 'apply' rows and skipping the tombstone read, so
+    per-batch delete-history work stays proportional to the batch rather
+    than the table (the operator's whole point).
 
     Exactly-once composition: the state store checkpoints with the query, so
     after a kill Spark replays the in-flight micro-batch against the

@@ -1,6 +1,6 @@
 """Per-stage scaling profile of the CDC replay job.
 
-Runs the exact bench replay (fresh table, bulk fused path) pinned to N
+Runs the exact bench replay (fresh table, every bucket touched) pinned to N
 cores with the Spark UI enabled, then dumps per-job / per-stage wall and
 task-time metrics from the UI REST API.  Compare a 1-core and a 4-core
 run to see which stage fails to scale.

@@ -93,9 +93,56 @@ def test_backfill_racing_stream_conflicts_cleanly(spark, tmp_path, events_and_or
     _assert_state_matches(backfill, pages, tombs)
 
 
+def _merge_case_batches(rows, pages):
+    """Two follow-up batches against a populated table that hit every case
+    of the apply merge, as (event dicts, salted, extra column or None):
+
+    - batch A (salted): a re-delivery of an already-applied event (the
+      stored row wins the tie), a delete newer than a stored row, and a hot
+      url's new event delivered three times beside two older events of it;
+    - batch B (schema-evolved, an extra ``rank`` column): an upsert older
+      than batch A's delete (the tombstone blocks it), and a newer upsert
+      of a stored url (applied, with the new column)."""
+    from datetime import timedelta
+
+    off = max(r["log_offset"] for r in rows) + 1
+    top = max(r["warc_ts"] for r in rows)
+    stored = sorted(pages)
+    redelivered, deleted, updated = stored[0], stored[1], stored[2]
+    hot = max({r["url"] for r in rows}, key=lambda u: sum(r["url"] == u for r in rows))
+
+    def ev(url, ts, offset, op, rev):
+        html = None if op == "delete" else f"<p>{url} rev {rev}</p>".encode()
+        return {"url": url, "warc_ts": ts, "log_offset": offset, "op": op,
+                "html": html, "lang": "en", "source_origin": "crawl",
+                "fingerprint": None}
+
+    again = next(r for r in rows if r["url"] == redelivered
+                 and r["log_offset"] == pages[redelivered]["log_offset"])
+    hot_new = ev(hot, top + timedelta(hours=2), off + 1, "update", "hot")
+    batch_a = [
+        dict(again),
+        ev(deleted, top + timedelta(hours=1), off, "delete", 0),
+        hot_new, dict(hot_new), dict(hot_new),
+        ev(hot, top - timedelta(hours=1), off + 2, "update", "old1"),
+        ev(hot, top, off + 3, "insert", "old2"),
+    ]
+    batch_b = [
+        ev(deleted, top, off + 4, "update", "stale"),
+        ev(updated, top + timedelta(hours=3), off + 5, "update", "evolved"),
+    ]
+    return [(batch_a, True, None), (batch_b, False, "rank")]
+
+
 def test_multi_batch_replay_matches_oracle(spark, tmp_path, events_and_oracle):
     """Split the log by delivery order into 5 sequential batches: the final
-    state must equal the single global LWW (batch boundaries invisible)."""
+    state must equal the single global LWW (batch boundaries invisible).
+    Then two hand-built batches hit every merge case against the populated
+    table, each checked against the oracle replay of everything so far."""
+    from pyspark.sql import types as T
+
+    from adsimportpipeline_spark.schema import CHANGE_EVENT_SCHEMA
+
     df, rows, pages, tombs = events_and_oracle
     root = str(tmp_path / "tbl5")
     table = LakeTable.create(spark, root, PAGES_SCHEMA, n_buckets=16)
@@ -108,6 +155,19 @@ def test_multi_batch_replay_matches_oracle(spark, tmp_path, events_and_oracle):
         )
         apply_batch(table, batch, batch_id=i, salted=(i % 2 == 1))
     _assert_state_matches(table, pages, tombs)
+
+    seen = list(rows)
+    for i, (events, salted, extra) in enumerate(_merge_case_batches(rows, pages), start=5):
+        schema = CHANGE_EVENT_SCHEMA
+        if extra:
+            schema = T.StructType(schema.fields + [T.StructField(extra, T.IntegerType())])
+            events = [dict(e, **{extra: i}) for e in events]
+        batch = spark.createDataFrame([[e[f] for f in schema.names] for e in events], schema)
+        apply_batch(table, batch, batch_id=i, salted=salted)
+        seen += events
+        want_pages, want_tombs = replay_oracle(seen)
+        _assert_state_matches(table, want_pages, want_tombs)
+    assert "rank" in table.schema().names
 
 
 def test_streaming_replay_and_resume(spark, tmp_path, events_and_oracle):

@@ -247,31 +247,76 @@ def test_streaming_replay_maintains_index(spark, tmp_path):
     assert index.current_version() == iv
 
 
+#: follow-up batches for the keep_applied check, against the table BATCHES
+#: populated: every case of the apply merge, as (rows, salted, extra column)
+MERGE_CASES = [
+    # re-delivery of u7's applied event (the stored row wins the tie, so it
+    # is NOT applied again); a hot url's new event delivered three times
+    # beside an older one; an upsert of u5 older than its delete (blocked)
+    ([
+        _ev("u7", 11, 11, "insert", TPL_A),
+        _ev("u8", 31, 31, "insert", TPL_C),
+        _ev("u8", 31, 31, "insert", TPL_C),
+        _ev("u8", 31, 31, "insert", TPL_C),
+        _ev("u8", 30, 30, "insert", TPL_D),
+        _ev("u5", 20, 32, "update", TPL_B),
+    ], True, None),
+    # a delete newer than u4's stored row; u6 updated by a schema-evolved
+    # batch (extra column)
+    ([
+        _ev("u4", 41, 41, "delete", None),
+        _ev("u6", 42, 42, "update", TPL_E),
+    ], False, "rank"),
+]
+
+
 def test_keep_applied_equals_committed_readback(spark, tmp_path):
     """apply_batch(keep_applied=[...]) hands back EXACTLY the rows the
-    commit applied — (url, warc_ts, log_offset, text) equal to the
-    committed table's read-back semi-joined on the batch (the O(table)
-    path it replaces in the runners) — on BOTH the fused fresh-table path
-    (batch 0) and the general stale-filter path (batch 1)."""
+    commit applied — (url, warc_ts, log_offset, text) equal to what the
+    committed table gained from the batch (its read-back semi-joined on the
+    batch, the O(table) path it replaces in the runners, minus the rows
+    already stored before it) — on a fresh table (batch 0), a populated
+    one (batches 1-2), and the merge cases of MERGE_CASES; after every
+    batch the table equals the oracle replay of all batches so far."""
+    from pyspark.sql import types as T
+
+    from adsimportpipeline_spark.datagen import replay_oracle
     from adsimportpipeline_spark.operators.incremental_dedup import (
         applied_winner_texts,
     )
 
+    cols = ["url", "warc_ts", "log_offset", "text"]
     table = LakeTable.create(
         spark, str(tmp_path / "pages"), PAGES_SCHEMA, n_buckets=8
     )
-    for i, rows in enumerate(BATCHES[:2]):
-        batch = spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA)
+    cases = [(rows, False, None) for rows in BATCHES] + MERGE_CASES
+    seen: list = []
+    applied: list = []
+    for i, (rows, salted, extra) in enumerate(cases):
+        schema = CHANGE_EVENT_SCHEMA
+        if extra:
+            schema = T.StructType(schema.fields + [T.StructField(extra, T.IntegerType())])
+            rows = [r + (i,) for r in rows]
+        batch = spark.createDataFrame(rows, schema)
+        before = {tuple(r) for r in table.read().select(*cols).collect()}
         ka: list = []
-        stats = apply_batch(table, batch, batch_id=i, keep_applied=ka)
-        assert not stats["skipped"] and len(ka) == 1
-        got = {
-            tuple(r)
-            for r in ka[0].select("url", "warc_ts", "log_offset", "text").collect()
-        }
-        want = {tuple(r) for r in applied_winner_texts(table, batch).collect()}
-        assert got == want and got  # non-empty on both paths
-        ka[0].unpersist()
+        stats = apply_batch(table, batch, batch_id=i, salted=salted, keep_applied=ka)
+        assert not stats["skipped"] and len(ka) == 2
+        got = {tuple(r) for r in ka[0].select(*cols).collect()}
+        want = {tuple(r) for r in applied_winner_texts(table, batch).collect()} - before
+        assert got == want and got  # non-empty in every case
+        applied.append({g[:3] for g in got})
+        for c in ka:
+            c.unpersist()
+        seen += [dict(zip(schema.names, r)) for r in rows]
+        pages, _ = replay_oracle(seen)
+        state = {r["url"]: r for r in table.read().collect()}
+        assert set(state) == set(pages)
+        for url, exp in pages.items():
+            assert (state[url]["log_offset"], state[url]["text"]) == (
+                exp["log_offset"], exp["text"]), url
+    # the re-delivered u7 event was not applied a second time
+    assert ("u7", T0 + timedelta(minutes=11), 11) not in applied[len(BATCHES)]
     # epoch no-op re-delivery: the cache is NOT built (runner falls back
     # to the table read)
     ka2: list = []

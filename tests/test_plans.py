@@ -232,3 +232,42 @@ def test_read_range_pushes_exact_predicate_to_scan(spark, tmp_path):
     assert "PushedFilters" in plan
     pushed = plan.split("PushedFilters")[1][:300]
     assert "warc_ts" in pushed and ("GreaterThanOrEqual" in pushed or ">=" in pushed)
+
+
+def test_apply_merges_in_one_bucket_shuffle(spark, tmp_path):
+    """A populated-table apply (stored rows AND tombstones in the touched
+    buckets) runs as ONE payload shuffle keyed on _bucket — batch winners,
+    stored rows and reduced tombstones are merged in one Arrow pass, with
+    no shuffled join against the stored rows — and a small batch's Python
+    stage runs at most one wave of tasks."""
+    import re
+
+    from adsimportpipeline_spark.apply import apply_batch
+    from adsimportpipeline_spark.datagen import GenSpec, generate_change_log
+    from adsimportpipeline_spark.lake.table import LakeTable
+    from adsimportpipeline_spark.schema import PAGES_SCHEMA
+
+    ev = generate_change_log(spark, GenSpec(n_events=2000, n_urls=200, seed=3))
+    table = LakeTable.create(spark, str(tmp_path / "t"), PAGES_SCHEMA, n_buckets=16)
+    apply_batch(table, ev.filter("log_offset < 1500"), batch_id=0)
+    m = table.manifest()
+    assert m["tombstone_files"] and any(m["buckets"].values())
+
+    ka: list = []
+    apply_batch(table, ev.filter("log_offset >= 1500"), batch_id=1, keep_applied=ka)
+    try:
+        merged = ka[1]  # the persisted merge output the write consumed
+        plan = _plan(merged)
+        final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+        exchange_ids = re.findall(r"[+-] Exchange \((\d+)\)", final)
+        partitioning = [
+            re.search(rf"\({i}\) Exchange\n.*?Arguments: (\w+\([^)]*\))", plan, re.S).group(1)
+            for i in exchange_ids
+        ]
+        assert sum(p.startswith("hashpartitioning(_bucket") for p in partitioning) == 1, partitioning
+        assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
+        assert "MapInArrow" in final
+        assert merged.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
+    finally:
+        for c in ka:
+            c.unpersist()
