@@ -20,9 +20,8 @@ plan Spark builds:
    task whole).
 3. **One payload shuffle**: ``repartition(n, _bucket)`` of the union, then
    ``sortWithinPartitions(url, warc_ts desc, log_offset desc, _kind)``.
-   ``n`` follows the input bytes the driver already knows
-   (:func:`bucket_shuffle_width`): one wave for a tail batch, up to four
-   for bulk input.
+   ``n`` is one wave of tasks (:func:`bucket_shuffle_width`), capped by
+   the touched bucket count, for a tail batch and a bulk replay alike.
 4. **One Arrow pass** (``mapInArrow``): the first row per url wins.  A
    stored row is emitted unchanged; a winning batch upsert gets its
    ``text`` extracted (HTML->text runs for applied upserts only); deletes
@@ -56,8 +55,6 @@ from .lake.table import (
     LakeTable,
     bucket_expr,
     bucket_shuffle_width,
-    file_bytes,
-    input_bytes,
 )
 from .operators.lww import lww_dedup_salted, lww_winner_rows
 from .schema import LINEAGE_SCHEMA, OP_DELETE, TOMBSTONE_SCHEMA
@@ -160,8 +157,7 @@ def _merged_rows(
     # a NULL op is no upsert: like a delete it replaces, and emits nothing
     parts = [tagged(winners, F.when(F.col("op") != OP_DELETE, KIND_UPSERT)
                     .otherwise(KIND_DELETE))]
-    stored_files = [e["path"] for b in touched for e in m["buckets"].get(str(b), [])]
-    if stored_files:
+    if any(m["buckets"].get(str(b)) for b in touched):
         parts.append(tagged(table.read_buckets(touched, m), F.lit(KIND_STORED)))
     if with_tombstones and m["tombstone_files"]:
         tombs = table.read_tombstones(TOMBSTONE_SCHEMA, m).withColumnRenamed("url", key)
@@ -178,11 +174,7 @@ def _merged_rows(
     for p in parts[1:]:
         merged = merged.union(p)
 
-    width = bucket_shuffle_width(
-        resolved.sparkSession,
-        input_bytes(resolved) + file_bytes(stored_files),
-        len(touched),
-    )
+    width = bucket_shuffle_width(resolved.sparkSession, len(touched))
     shuffled = (
         merged.withColumn("_bucket", bucket_expr(key, nb))
         .repartition(width, F.col("_bucket"))
@@ -222,10 +214,14 @@ def apply_batch(
     applied upserts WITH their extracted ``text``, then the persisted merge
     output they are filtered from.  The caller owns the unpersist of every
     element.  A derived-index maintainer (update_lsh_index) can then
-    consume the rows this batch actually applied at O(batch) cost with no
-    table read-back and no second HTML->text extraction.  Empty when the
-    batch was an epoch no-op (caller falls back to a table read for that
-    crash-recovery case)."""
+    consume the rows this batch actually applied with no table read-back
+    and no second HTML->text extraction.  The persisted frame is every row
+    the touched buckets hold after the batch, stored rows included: its
+    size follows the touched buckets (most of the table for a tail batch
+    that touches most buckets), not the batch, so pass ``keep_applied``
+    only when the applied rows are read (the replay runners do so only with
+    an LSH index attached).  Empty when the batch was an epoch no-op
+    (caller falls back to a table read for that crash-recovery case)."""
     if batch_id <= table.last_epoch(epoch_source):
         return {"batch_id": batch_id, "skipped": True}
 

@@ -163,50 +163,16 @@ def bucket_expr(key_col: str, n_buckets: int):
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
 
 
-#: on-disk (zstd parquet) input bytes one bucket-shuffle task should get
-#: before a second wave pays for itself.  A Python task of the apply pass
-#: costs ~0.25 s whatever its row count, so a stage with less than a
-#: wave's worth of this runs best as ONE wave.
-_TASK_INPUT_BYTES = 4 << 20
-
-
-def file_bytes(paths) -> int:
-    """Summed size of local files (a path that cannot be stat'ed counts 0):
-    the input-size signal the driver already has without running a job."""
-    total = 0
-    for p in paths:
-        try:
-            total += os.path.getsize(p)
-        except OSError:
-            pass
-    return total
-
-
-def input_bytes(df: DataFrame) -> int:
-    """The optimizer's size estimate of ``df`` (no job, no data read): the
-    scanned files' bytes for a file scan, and for a ``foreachBatch`` micro-
-    batch the stats its source plan carried in (the batch is an opaque
-    ``LogicalRDD`` whose ``inputFiles`` is empty).  0 when the plan has no
-    estimate (Spark's default of ~2^63 means "unknown")."""
-    from py4j.protocol import Py4JError
-
-    try:
-        n = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-    except (Py4JError, AttributeError):  # no JVM plan (e.g. Spark Connect)
-        return 0
-    return n if n < (1 << 62) else 0
-
-
-def bucket_shuffle_width(spark: SparkSession, n_bytes: int, n_buckets: int) -> int:
+def bucket_shuffle_width(spark: SparkSession, n_buckets: int) -> int:
     """Partition count for a payload shuffle keyed on ``_bucket``: one wave
-    (``defaultParallelism``) until the input exceeds a wave's worth of
-    :data:`_TASK_INPUT_BYTES`, at most four waves for bulk input, and never
-    more than ``n_buckets`` (a hash on ``_bucket`` fills at most that many
-    partitions).  An explicit count also keeps AQE from coalescing a small
-    write to a single task."""
-    dp = max(spark.sparkContext.defaultParallelism, 1)
-    waves = min(4, max(1, -(-n_bytes // (dp * _TASK_INPUT_BYTES))))
-    return max(1, min(dp * waves, n_buckets))
+    (``defaultParallelism``), never more than ``n_buckets`` (a hash on
+    ``_bucket`` fills at most that many partitions).  A Python task of the
+    apply pass costs ~0.25 s whatever its row count, and more waves bought
+    nothing at any measured size: bench.py's bulk apply into 128 buckets
+    on a 4-CPU host took a median 4.3 s with 4 tasks against 4.9 s with 16
+    at 1M events, and 11.6 s against 12.1 s at 6M.  An explicit count also
+    keeps AQE from coalescing a small write to a single task."""
+    return max(1, min(spark.sparkContext.defaultParallelism, n_buckets))
 
 
 class LakeTable:
@@ -717,12 +683,11 @@ class LakeTable:
         bucket (skipped when ``pre_partitioned``) so each bucket is written
         by one task, sort within partitions by ``sort_cols``, write one
         ``_bucket=b`` directory per bucket, and return bucket -> files.
-        The shuffle width is :func:`bucket_shuffle_width` of ``df``'s
-        :func:`input_bytes`."""
+        The shuffle width is :func:`bucket_shuffle_width`."""
         d = os.path.join(self.root, "data", f"{tag}-{uuid.uuid4().hex[:12]}")
         tagged = df.withColumn("_bucket", bucket_expr(key, n_buckets))
         if not pre_partitioned:
-            width = bucket_shuffle_width(self.spark, input_bytes(df), n_buckets)
+            width = bucket_shuffle_width(self.spark, n_buckets)
             tagged = tagged.repartition(width, F.col("_bucket"))
         if sort_cols:
             # in-partition sort only — no extra shuffle; tightens

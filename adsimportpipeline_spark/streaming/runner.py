@@ -22,11 +22,14 @@ def _apply_and_maintain_index(table, index, batch_df, batch_id, raw_batch_df=Non
     """apply_batch + incremental LSH index maintenance, shared by both
     replay modes.  The applied-upserts frame apply_batch materializes
     (``keep_applied`` — text extracted exactly once, shared with the write
-    job) feeds the index at O(batch) cost; the epoch no-op re-delivery
-    (crash between the table and index commits) falls back to reading the
-    applied rows back from the committed table.  The persisted frame's
-    lifetime covers apply_batch itself, so a commit that raises AFTER the
-    persist (e.g. CommitConflictError) cannot leak pinned storage.
+    job) feeds the index with no table read-back.  It is filtered from the
+    persisted merge output, which covers the touched buckets (their stored
+    rows too), so only an attached index asks for it.  The epoch no-op
+    re-delivery (crash between the table and index commits) falls back to
+    reading the applied rows back from the committed table.  The persisted
+    frame's lifetime covers apply_batch itself, so a commit that raises
+    AFTER the persist (e.g. CommitConflictError) cannot leak pinned
+    storage.
 
     ``raw_batch_df``: the fallback's batch view when it differs from the
     applied one (the stateful mode reads back against the un-pruned batch
