@@ -13,11 +13,13 @@ plan Spark builds:
    changed-record short-circuit, tasks.py:52-64).
 2. **Merge inputs**, all in the table's row schema plus a ``_kind`` tag:
    the batch's LWW winner rows (:func:`lww_winner_rows`: an argmax over
-   the ordering keys, broadcast back to the events; explicit salting via
-   :func:`lww_dedup_salted` when ``salted``), the stored rows of the
-   touched buckets, and their tombstones reduced to the latest per url (a
-   partial aggregate, so a hot url's delete history never reaches one
-   task whole).
+   the ordering keys, joined back to the events on the winning
+   ``log_offset``; Spark's planner picks the join from the batch's size
+   estimate, a broadcast for a tail batch, with no job to measure it;
+   explicit salting via :func:`lww_dedup_salted` when ``salted``), the
+   stored rows of the touched buckets, and their tombstones reduced to the
+   latest per url (a partial aggregate, so a hot url's delete history
+   never reaches one task whole).
 3. **One payload shuffle**: ``repartition(n, _bucket)`` of the union, then
    ``sortWithinPartitions(url, warc_ts desc, log_offset desc, _kind)``.
    ``n`` is one wave of tasks (:func:`bucket_shuffle_width`), capped by
@@ -134,7 +136,6 @@ def _merged_rows(
     salted: bool,
     n_salts: int,
     with_tombstones: bool,
-    cleanup: list,
 ) -> DataFrame:
     """The rows the touched buckets hold after this batch, tagged with
     ``_kind`` (stored or applied upsert), shuffled by ``_bucket``: batch
@@ -151,9 +152,7 @@ def _merged_rows(
     if salted:
         winners = lww_dedup_salted(resolved, key, n_salts=n_salts)
     else:
-        winners = lww_winner_rows(
-            resolved, key, cleanup=cleanup, unique_order_col="log_offset"
-        )
+        winners = lww_winner_rows(resolved, key, unique_order_col="log_offset")
     # a NULL op is no upsert: like a delete it replaces, and emits nothing
     parts = [tagged(winners, F.when(F.col("op") != OP_DELETE, KIND_UPSERT)
                     .otherwise(KIND_DELETE))]
@@ -237,147 +236,139 @@ def apply_batch(
     # batch_df is deliberately NOT cached: its passes (touched discovery,
     # lineage stats, winners, tombstone audit) each prune to a few columns,
     # so columnar re-reads from the source beat materializing full rows
-    _caches: list = []
-    try:
-        _mark("manifest_read")  # time since t0: the manifest open above
+    _mark("manifest_read")  # time since t0: the manifest open above
 
-        # pre-resolved mode: only 'apply' rows flow to the merge; the raw
-        # batch is kept for the tombstone audit + lineage stats
-        resolved = (
-            batch_df.filter(F.col(decision_col) == "apply").drop(decision_col)
-            if decision_col
-            else batch_df
+    # pre-resolved mode: only 'apply' rows flow to the merge; the raw
+    # batch is kept for the tombstone audit + lineage stats
+    resolved = (
+        batch_df.filter(F.col(decision_col) == "apply").drop(decision_col)
+        if decision_col
+        else batch_df
+    )
+
+    # bucket pruning: which table buckets does this batch touch?  A
+    # narrow url-column scan of the raw batch; a bulk replay touches
+    # every bucket anyway — prune_buckets=False skips the job.
+    if prune_buckets:
+        touched = [
+            r[0]
+            for r in resolved.select(bucket_expr(key, nb).alias("b")).distinct().collect()
+        ]
+    else:
+        touched = list(range(nb))
+    has_tombs = bool(m["tombstone_files"])
+    evolved = reconcile_schema(table.schema(m), pages_schema_for(resolved.schema))
+    _mark("dedup_and_touched")
+
+    # Passed as a thunk: the merge's driver-side plan construction (the
+    # stored-bucket and tombstone listings, analysis) then runs in
+    # overwrite_buckets' pool thread, overlapping the tombstone/lineage
+    # append jobs.
+    def new_data() -> DataFrame:
+        merged = _merged_rows(
+            table, m, resolved, touched, evolved, salted, n_salts,
+            with_tombstones=not decision_col,
         )
-
-        # bucket pruning: which table buckets does this batch touch?  A
-        # narrow url-column scan of the raw batch; a bulk replay touches
-        # every bucket anyway — prune_buckets=False skips the job.
-        if prune_buckets:
-            touched = [
-                r[0]
-                for r in resolved.select(bucket_expr(key, nb).alias("b")).distinct().collect()
-            ]
-        else:
-            touched = list(range(nb))
-        has_tombs = bool(m["tombstone_files"])
-        evolved = reconcile_schema(table.schema(m), pages_schema_for(resolved.schema))
-        _mark("dedup_and_touched")
-
-        # Passed as a thunk: the merge's eager work (the winner-offset
-        # measure inside lww_winner_rows when footers give no bound) then
-        # runs in overwrite_buckets' pool thread, overlapping the
-        # tombstone/lineage append jobs.
-        def new_data() -> DataFrame:
-            merged = _merged_rows(
-                table, m, resolved, touched, evolved, salted, n_salts,
-                with_tombstones=not decision_col, cleanup=_caches,
+        if keep_applied is not None:
+            merged = merged.persist(StorageLevel.MEMORY_AND_DISK)
+            keep_applied.append(
+                merged.filter(F.col("_kind") == KIND_UPSERT).drop("_kind")
             )
-            if keep_applied is not None:
-                merged = merged.persist(StorageLevel.MEMORY_AND_DISK)
-                keep_applied.append(
-                    merged.filter(F.col("_kind") == KIND_UPSERT).drop("_kind")
-                )
-                keep_applied.append(merged)
-            return merged.drop("_kind")
+            keep_applied.append(merged)
+        return merged.drop("_kind")
 
-        # tombstone audit: every delete event in the batch (reference
-        # app.py:15-21 appends every delete to change_log).  Anti-join
-        # against already-stored tombstones so a duplicate delivery that
-        # lands in a *different* micro-batch than its original does not
-        # append a second (url, ts, offset) row — the audit log stays a
-        # distinct set, matching replay_oracle's semantics exactly.  Passed
-        # as a THUNK: its driver-side plan construction runs in
-        # overwrite_buckets' pool thread, overlapped with the main write.
-        def _tomb_appends() -> DataFrame:
-            t = (
-                batch_df.filter(F.col("op") == OP_DELETE)
-                .select(
-                    F.col(key).alias("url"),
-                    F.col("warc_ts").alias("deleted_ts"),
-                    F.lit("deleted").alias("key"),
-                    F.col("log_offset"),
-                )
-                .distinct()
+    # tombstone audit: every delete event in the batch (reference
+    # app.py:15-21 appends every delete to change_log).  Anti-join
+    # against already-stored tombstones so a duplicate delivery that
+    # lands in a *different* micro-batch than its original does not
+    # append a second (url, ts, offset) row — the audit log stays a
+    # distinct set, matching replay_oracle's semantics exactly.  Passed
+    # as a THUNK: its driver-side plan construction runs in
+    # overwrite_buckets' pool thread, overlapped with the main write.
+    def _tomb_appends() -> DataFrame:
+        t = (
+            batch_df.filter(F.col("op") == OP_DELETE)
+            .select(
+                F.col(key).alias("url"),
+                F.col("warc_ts").alias("deleted_ts"),
+                F.lit("deleted").alias("key"),
+                F.col("log_offset"),
             )
-            if has_tombs:
-                t = t.join(
-                    table.read_tombstones(TOMBSTONE_SCHEMA, m).select(
-                        "url", "deleted_ts", "log_offset"
-                    ),
-                    ["url", "deleted_ts", "log_offset"],
-                    "left_anti",
-                )
-            return t
-
-        # lineage: per-source-partition offset range + row counts
-        # (north_rule).  A pure transformation — no driver collect; plan
-        # built in the pool thread, write runs as a concurrent Spark job
-        # alongside the data write inside overwrite_buckets.  The reported
-        # merge latency is captured HERE (plan time), not at thunk call.
-        latency_ms = (time.time() - t0) * 1000.0
-
-        def _lineage_df() -> DataFrame:
-            ldf = (
-                batch_df.groupBy(F.spark_partition_id().alias("partition_id"))
-                .agg(
-                    F.min("log_offset").alias("offset_start"),
-                    F.max("log_offset").alias("offset_end"),
-                    F.count(F.lit(1)).alias("rows_applied"),
-                )
-                .select(
-                    F.lit(int(batch_id)).alias("batch_id"),
-                    "partition_id",
-                    "offset_start",
-                    "offset_end",
-                    "rows_applied",
-                    F.lit(float(latency_ms)).alias("merge_latency_ms"),
-                    F.lit(int(batch_id)).alias("commit_epoch"),
-                )
-            )
-            return align_to_schema(ldf, LINEAGE_SCHEMA)
-
-        _mark("plan_build")
-        version = table.overwrite_buckets(
-            new_data,
-            touched,
-            epoch_source=epoch_source,
-            epoch=batch_id,
-            new_schema=evolved,
-            tombstone_appends=_tomb_appends,
-            lineage_appends=_lineage_df,
-            pre_partitioned=True,
-            # revalidation parent = the snapshot THIS batch's plan read at
-            # its top (bucket pruning, stored rows, epochs all came from it)
-            parent_version=m["version"],
+            .distinct()
         )
-        _mark("commit_write")
-        # periodic fold of the append-only tombstone/lineage branches keeps
-        # per-batch guard reads and the manifest O(1) over the table's
-        # lifetime (its own atomic commit; a crash between the two commits
-        # loses only the fold, never data).  The fold is COSMETIC: losing a
-        # CAS to a concurrent maintenance job (compact/expire between the
-        # data commit above and here) must not kill the streaming query —
-        # absorb one conflict with a fresh re-plan, and if the table is
-        # racing that hard this trigger just skips; the next scheduled
-        # batch folds everything anyway.
-        if compact_appends_every and batch_id % compact_appends_every == compact_appends_every - 1:
-            try:
-                table.compact_appends(retries=1)
-            except CommitConflictError:
-                pass
-            _mark("compact_appends")
-        return {
-            "batch_id": batch_id,
-            "skipped": False,
-            "version": version,
-            "touched_buckets": len(touched),
-            "latency_ms": latency_ms,
-            "phases": phases,
-            "committed_at": datetime.now(timezone.utc).isoformat(),
-        }
-    finally:
-        for _c in _caches:
-            try:
-                _c.unpersist()
-            except Exception:
-                pass
+        if has_tombs:
+            t = t.join(
+                table.read_tombstones(TOMBSTONE_SCHEMA, m).select(
+                    "url", "deleted_ts", "log_offset"
+                ),
+                ["url", "deleted_ts", "log_offset"],
+                "left_anti",
+            )
+        return t
+
+    # lineage: per-source-partition offset range + row counts
+    # (north_rule).  A pure transformation — no driver collect; plan
+    # built in the pool thread, write runs as a concurrent Spark job
+    # alongside the data write inside overwrite_buckets.  The reported
+    # merge latency is captured HERE (plan time), not at thunk call.
+    latency_ms = (time.time() - t0) * 1000.0
+
+    def _lineage_df() -> DataFrame:
+        ldf = (
+            batch_df.groupBy(F.spark_partition_id().alias("partition_id"))
+            .agg(
+                F.min("log_offset").alias("offset_start"),
+                F.max("log_offset").alias("offset_end"),
+                F.count(F.lit(1)).alias("rows_applied"),
+            )
+            .select(
+                F.lit(int(batch_id)).alias("batch_id"),
+                "partition_id",
+                "offset_start",
+                "offset_end",
+                "rows_applied",
+                F.lit(float(latency_ms)).alias("merge_latency_ms"),
+                F.lit(int(batch_id)).alias("commit_epoch"),
+            )
+        )
+        return align_to_schema(ldf, LINEAGE_SCHEMA)
+
+    _mark("plan_build")
+    version = table.overwrite_buckets(
+        new_data,
+        touched,
+        epoch_source=epoch_source,
+        epoch=batch_id,
+        new_schema=evolved,
+        tombstone_appends=_tomb_appends,
+        lineage_appends=_lineage_df,
+        pre_partitioned=True,
+        # revalidation parent = the snapshot THIS batch's plan read at
+        # its top (bucket pruning, stored rows, epochs all came from it)
+        parent_version=m["version"],
+    )
+    _mark("commit_write")
+    # periodic fold of the append-only tombstone/lineage branches keeps
+    # per-batch guard reads and the manifest O(1) over the table's
+    # lifetime (its own atomic commit; a crash between the two commits
+    # loses only the fold, never data).  The fold is COSMETIC: losing a
+    # CAS to a concurrent maintenance job (compact/expire between the
+    # data commit above and here) must not kill the streaming query —
+    # absorb one conflict with a fresh re-plan, and if the table is
+    # racing that hard this trigger just skips; the next scheduled
+    # batch folds everything anyway.
+    if compact_appends_every and batch_id % compact_appends_every == compact_appends_every - 1:
+        try:
+            table.compact_appends(retries=1)
+        except CommitConflictError:
+            pass
+        _mark("compact_appends")
+    return {
+        "batch_id": batch_id,
+        "skipped": False,
+        "version": version,
+        "touched_buckets": len(touched),
+        "latency_ms": latency_ms,
+        "phases": phases,
+        "committed_at": datetime.now(timezone.utc).isoformat(),
+    }

@@ -134,15 +134,6 @@ def lsh_bucket(vec_col: str, n_planes: int, dim: int) -> Column:
     return bucket.cast("int")
 
 
-def lsh_bucket_sql(vec_expr: str, n_planes: int, dim: int) -> str:
-    """SQL twin of :func:`lsh_bucket`."""
-    return (
-        "CAST("
-        + " + ".join(f"({hyperplane_sql(vec_expr, p, dim)}) * {2 ** p}" for p in range(n_planes))
-        + " AS INTEGER)"
-    )
-
-
 def with_centroid_scores(
     df: DataFrame,
     vec_col: str,

@@ -10,7 +10,8 @@ and the epoch check makes the replay a no-op.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..apply import apply_batch
@@ -18,7 +19,7 @@ from ..lake.table import LakeTable
 from ..sources.changelog import stream_change_log
 
 
-def _apply_and_maintain_index(table, index, batch_df, batch_id, raw_batch_df=None, **apply_kwargs):
+def _apply_and_maintain_index(table, index, batch_df, batch_id, decision_col=None, **apply_kwargs):
     """apply_batch + incremental LSH index maintenance, shared by both
     replay modes.  The applied-upserts frame apply_batch materializes
     (``keep_applied`` — text extracted exactly once, shared with the write
@@ -31,29 +32,77 @@ def _apply_and_maintain_index(table, index, batch_df, batch_id, raw_batch_df=Non
     AFTER the persist (e.g. CommitConflictError) cannot leak pinned
     storage.
 
-    ``raw_batch_df``: the fallback's batch view when it differs from the
-    applied one (the stateful mode reads back against the un-pruned batch
-    minus its decision column)."""
+    ``decision_col`` (the stateful mode's in-stream LWW decision): rows
+    the state already rejected are dropped before the apply, except
+    deletes of ANY decision, which keep flowing for the tombstone audit
+    (reference appends every delete).  The read-back fallback reads the
+    whole batch minus the decision column."""
     from ..operators.incremental_dedup import (
         applied_winner_texts,
         update_lsh_index,
     )
 
+    raw_batch_df = batch_df
+    if decision_col is not None:
+        raw_batch_df = batch_df.drop(decision_col)
+        batch_df = batch_df.filter(
+            (F.col(decision_col) == "apply") | (F.col("op") == "delete")
+        )
     ka: list = [] if index is not None else None
     try:
-        stats = apply_batch(table, batch_df, batch_id, keep_applied=ka, **apply_kwargs)
+        stats = apply_batch(
+            table, batch_df, batch_id, keep_applied=ka,
+            decision_col=decision_col, **apply_kwargs,
+        )
         if index is not None:
             if ka:
                 applied = ka[0].select("url", "warc_ts", "log_offset", "text")
             else:
-                applied = applied_winner_texts(
-                    table, batch_df if raw_batch_df is None else raw_batch_df
-                )
+                applied = applied_winner_texts(table, raw_batch_df)
             update_lsh_index(index, applied, batch_id)
         return stats
     finally:
         for c in ka or []:
             c.unpersist()
+
+
+def _replay(
+    spark: SparkSession,
+    stream: DataFrame,
+    table_root: str,
+    checkpoint: str,
+    query_name: str,
+    available_now: bool,
+    collect_stats: list | None,
+    lsh_index_root: str | None,
+    **apply_kwargs,
+) -> StreamingQuery | None:
+    """The replay loop of both modes: a checkpointed foreachBatch sink
+    over ``stream`` that applies each micro-batch with
+    :func:`_apply_and_maintain_index` (``apply_kwargs`` select the mode)."""
+    table = LakeTable.load(spark, table_root)
+    index = None
+    if lsh_index_root is not None:
+        from ..operators.incremental_dedup import create_lsh_index
+
+        index = create_lsh_index(spark, lsh_index_root)
+
+    def _apply(batch_df, batch_id):
+        stats = _apply_and_maintain_index(
+            table, index, batch_df, batch_id, **apply_kwargs
+        )
+        if collect_stats is not None:
+            collect_stats.append(stats)
+
+    writer = (
+        stream.writeStream.foreachBatch(_apply)
+        .option("checkpointLocation", checkpoint)
+        .queryName(query_name)
+    )
+    if not available_now:
+        return writer.start()
+    writer.trigger(availableNow=True).start().awaitTermination()
+    return None
 
 
 def run_replay(
@@ -83,32 +132,11 @@ def run_replay(
     the table apply no-ops on its epoch, and the index (whose epoch never
     landed) catches up — both sides idempotent, proven by
     tests/test_incremental_dedup.py."""
-    table = LakeTable.load(spark, table_root)
-    stream = stream_change_log(spark, log_path, max_files_per_trigger)
-    index = None
-    if lsh_index_root is not None:
-        from ..operators.incremental_dedup import create_lsh_index
-
-        index = create_lsh_index(spark, lsh_index_root)
-
-    def _apply(batch_df, batch_id):
-        stats = _apply_and_maintain_index(
-            table, index, batch_df, batch_id, salted=salted
-        )
-        if collect_stats is not None:
-            collect_stats.append(stats)
-
-    writer = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .queryName("cdc-replay")
+    return _replay(
+        spark, stream_change_log(spark, log_path, max_files_per_trigger),
+        table_root, checkpoint, "cdc-replay", available_now, collect_stats,
+        lsh_index_root, salted=salted,
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-    else:
-        q = writer.start()
-        return q
 
 
 def run_replay_stateful(
@@ -141,41 +169,11 @@ def run_replay_stateful(
     indexed at all — they are absent from the applied set by construction.
     Only the crash-between-commits re-delivery falls back to reading the
     applied rows back from the committed table."""
-    from pyspark.sql import functions as F
-
     from .stateful import stateful_lww_decisions
 
-    table = LakeTable.load(spark, table_root)
     stream = stream_change_log(spark, log_path, max_files_per_trigger)
-    decided = stateful_lww_decisions(stream, passthrough_payload=True)
-    index = None
-    if lsh_index_root is not None:
-        from ..operators.incremental_dedup import create_lsh_index
-
-        index = create_lsh_index(spark, lsh_index_root)
-
-    def _apply(batch_df, batch_id):
-        # drop rows the state already rejected; deletes of ANY decision keep
-        # flowing for the tombstone audit (reference appends every delete)
-        pruned = batch_df.filter(
-            (F.col("decision") == "apply") | (F.col("op") == "delete")
-        )
-        stats = _apply_and_maintain_index(
-            table, index, pruned, batch_id,
-            raw_batch_df=batch_df.drop("decision"),
-            decision_col="decision",
-        )
-        if collect_stats is not None:
-            collect_stats.append(stats)
-
-    writer = (
-        decided.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .queryName("cdc-replay-stateful")
+    return _replay(
+        spark, stateful_lww_decisions(stream, passthrough_payload=True),
+        table_root, checkpoint, "cdc-replay-stateful", available_now,
+        collect_stats, lsh_index_root, decision_col="decision",
     )
-    if available_now:
-        q = writer.trigger(availableNow=True).start()
-        q.awaitTermination()
-    else:
-        q = writer.start()
-        return q

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 import pytest
 
@@ -23,3 +24,21 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def no_broadcast(spark):
+    """A context manager that disables broadcast joins
+    (``spark.sql.autoBroadcastJoinThreshold=-1``) inside its block; plans
+    and actions in the block see the setting."""
+
+    @contextmanager
+    def off():
+        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            yield
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+    return off

@@ -117,8 +117,13 @@ def test_references_merge_always_append(spark):
     assert out[0]["references"] == ["r1", "r2", "r3"]
 
 
-def test_lww_variants_agree(spark):
-    """max_by, salted two-phase, and window formulations are equivalent."""
+def _has_broadcast_join(df) -> bool:
+    return "BroadcastHashJoin" in df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_lww_variants_agree(spark, no_broadcast):
+    """max_by, salted two-phase, window and semi-join formulations are
+    equivalent; the semi-join too when broadcast joins are disabled."""
     from adsimportpipeline_spark.datagen import GenSpec, generate_change_log
 
     ev = generate_change_log(spark, GenSpec(n_events=3000, n_urls=100, seed=3)).select(
@@ -128,7 +133,10 @@ def test_lww_variants_agree(spark):
     b = sorted(map(tuple, lww_dedup_salted(ev, n_salts=7).collect()))
     c = sorted(map(tuple, lww_dedup_window(ev).collect()))
     d = sorted(map(tuple, lww_dedup_semi(ev).collect()))
-    e = sorted(map(tuple, lww_dedup_semi(ev, broadcast_keys=False).collect()))
+    with no_broadcast():
+        shuffled = lww_dedup_semi(ev)
+        assert not _has_broadcast_join(shuffled)
+        e = sorted(map(tuple, shuffled.collect()))
     assert a == b == c == d == e
 
 
@@ -274,15 +282,11 @@ def test_tombstone_guard_custom_order_cols(spark):
     assert sorted(r["url"] for r in out.collect()) == ["u1", "u3", "u4"]
 
 
-def test_metadata_row_upper_bound_and_cap(spark, tmp_path):
-    """The 0-cost broadcast gate: parquet footers bound the row count for a
-    plain file scan (filters keep the bound valid), return None for
-    non-file frames, and the byte-derived offset cap tracks the session's
-    autoBroadcastJoinThreshold."""
-    from adsimportpipeline_spark.operators.lww import (
-        _metadata_row_upper_bound,
-        _offset_broadcast_cap_rows,
-    )
+def test_metadata_row_upper_bound(spark, tmp_path):
+    """Parquet footers bound the row count of a plain file scan with no
+    job (filters keep the bound valid), and give None for non-file
+    frames."""
+    from adsimportpipeline_spark.operators.lww import _metadata_row_upper_bound
 
     p = str(tmp_path / "ub")
     spark.range(0, 1000).write.parquet(p)
@@ -293,15 +297,12 @@ def test_metadata_row_upper_bound_and_cap(spark, tmp_path):
     # not a file scan -> unknown
     assert _metadata_row_upper_bound(spark.range(5)) is None
 
-    thr = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-    # the tighter of the byte budget and the caller's explicit row cap wins
-    assert _offset_broadcast_cap_rows(spark, 4_000_000) == min(thr // 8, 4_000_000)
 
-
-def test_lww_winner_rows_hash_grouping_matches_string_grouping(spark):
+def test_lww_winner_rows_hash_grouping_matches_string_grouping(spark, no_broadcast):
     """The 128-bit-hash argmax must produce exactly the winner set the
     url-string argmax produces (collisions are ~2^-128; none in any finite
-    test), across both the metadata-broadcast and forced-shuffle paths."""
+    test), with the planner's broadcast join and with broadcast joins
+    disabled."""
     from adsimportpipeline_spark.operators.lww import lww_winner_rows
 
     rows = [
@@ -319,14 +320,10 @@ def test_lww_winner_rows_hash_grouping_matches_string_grouping(spark):
         ).collect()
     }
     assert got == expected
-    forced = {
-        (r["url"], r["log_offset"])
-        for r in lww_winner_rows(
-            df,
-            "url",
-            ("warc_ts", "log_offset"),
-            unique_order_col="log_offset",
-            broadcast_keys=False,
-        ).collect()
-    }
+    with no_broadcast():
+        shuffled = lww_winner_rows(
+            df, "url", ("warc_ts", "log_offset"), unique_order_col="log_offset"
+        )
+        assert not _has_broadcast_join(shuffled)
+        forced = {(r["url"], r["log_offset"]) for r in shuffled.collect()}
     assert forced == expected

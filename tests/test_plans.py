@@ -31,25 +31,28 @@ def _ev(spark, sf_dir):
     )
 
 
-def test_semi_lww_join_strategy_adapts(spark, sf_dir):
+def test_semi_lww_join_strategy_adapts(spark, sf_dir, no_broadcast):
     """The winner-keys join must not be a hard-coded broadcast: forcing
     broadcast of 10^9 distinct keys in a bulk replay is a driver OOM.
-    True/False force the strategy; the default defers to AQE, which picks
-    broadcast at runtime only because this key set is actually small."""
+    Spark's planner picks broadcast here only because this key set is
+    small; with broadcast joins disabled the same call plans a shuffled
+    join and returns the same rows."""
     ev = _ev(spark, sf_dir)
-    assert "BroadcastHashJoin" in _plan(lww_dedup_semi(ev, broadcast_keys=True))
-    p_shuffled = _plan(lww_dedup_semi(ev, broadcast_keys=False))
-    assert "BroadcastHashJoin" not in p_shuffled
-    assert "ShuffledHashJoin" in p_shuffled or "SortMergeJoin" in p_shuffled
-
     adaptive = lww_dedup_semi(ev)
-    adaptive.collect()  # let AQE finalize
+    rows = sorted(map(tuple, adaptive.collect()))  # let AQE finalize
     p_final = _plan(adaptive)
     assert "AdaptiveSparkPlan" in p_final
-    assert "BroadcastHashJoin" in p_final  # runtime choice on a small key set
+    assert "BroadcastHashJoin" in p_final
+
+    with no_broadcast():
+        shuffled = lww_dedup_semi(ev)
+        p_shuffled = _plan(shuffled)
+        assert "BroadcastHashJoin" not in p_shuffled
+        assert "ShuffledHashJoin" in p_shuffled or "SortMergeJoin" in p_shuffled
+        assert sorted(map(tuple, shuffled.collect())) == rows
 
 
-def test_tombstone_guard_no_forced_broadcast(spark, sf_dir):
+def test_tombstone_guard_no_forced_broadcast(spark, sf_dir, no_broadcast):
     """tombstone_guard joins against an unboundedly-growing table; the plan
     must respect the broadcast threshold instead of forcing a broadcast
     (with broadcasts disabled the join degrades to a shuffle, not an OOM)."""
@@ -57,13 +60,9 @@ def test_tombstone_guard_no_forced_broadcast(spark, sf_dir):
 
     ev = _ev(spark, sf_dir)
     tombs = ev.select("url", "warc_ts", "log_offset")
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with no_broadcast():
         plan = _plan(tombstone_guard(ev, tombs))
         assert "BroadcastHashJoin" not in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 def test_lww_max_by_has_partial_aggregation(spark, sf_dir):
@@ -89,14 +88,14 @@ def test_broadcast_join_in_lookup(spark, sf_dir):
 
 
 def test_winner_rows_metadata_gate_plans_broadcast(spark, sf_dir):
-    """The bulk path's winner fetch: when parquet footers prove the source
-    row count fits the offset-broadcast budget, the plan must be a
-    BroadcastHashJoin on log_offset with NO measuring job and NO payload
-    shuffle (a regression to a sort-merge/shuffled join here re-shuffles
-    every winner payload at 10^10 scale)."""
+    """The bulk path's winner fetch: the planner's size estimate of the
+    winner-offset aggregate of a parquet scan is under the broadcast
+    threshold, so Spark itself picks a BroadcastHashJoin on log_offset,
+    with NO payload shuffle (a regression to a sort-merge/shuffled join
+    here re-shuffles every winner payload at 10^10 scale)."""
     from adsimportpipeline_spark.operators.lww import lww_winner_rows
 
-    ev = _ev(spark, sf_dir)  # a plain parquet scan -> footer bound available
+    ev = _ev(spark, sf_dir)  # a plain parquet scan, with a size estimate
     plan = _plan(lww_winner_rows(ev, unique_order_col="log_offset"))
     assert "BroadcastHashJoin" in plan and "log_offset" in plan
     assert "SortMergeJoin" not in plan
@@ -191,20 +190,75 @@ def test_metadata_bound_rejects_non_scan_shapes(spark, sf_dir):
     ) is None
 
 
-def test_offset_broadcast_cap_honors_disabled_and_caller_cap(spark):
-    """-1 threshold (user disabled broadcast joins) must disable the gate;
-    an explicit small caller cap must never be silently raised."""
-    from adsimportpipeline_spark.operators.lww import _offset_broadcast_cap_rows
+def test_winner_rows_honor_disabled_broadcast_threshold(spark, sf_dir, no_broadcast):
+    """A -1 ``autoBroadcastJoinThreshold`` (the user disabled broadcast
+    joins) must hold for the winner-offset fetch too: no broadcast in the
+    plan, the same winner rows."""
+    from adsimportpipeline_spark.operators.lww import lww_winner_rows
 
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        assert _offset_broadcast_cap_rows(spark, 4_000_000) == 0
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 << 20))
-        assert _offset_broadcast_cap_rows(spark, 50_000) == 50_000
-        assert _offset_broadcast_cap_rows(spark, 100_000_000) == (64 << 20) // 8
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    ev = _ev(spark, sf_dir)
+    rows = sorted(map(tuple, lww_winner_rows(ev, unique_order_col="log_offset").collect()))
+    with no_broadcast():
+        shuffled = lww_winner_rows(ev, unique_order_col="log_offset")
+        assert "BroadcastHashJoin" not in _plan(shuffled)
+        assert sorted(map(tuple, shuffled.collect())) == rows
+
+
+def test_stream_batch_winner_fetch_runs_no_job(spark, tmp_path):
+    """Inside foreachBatch the micro-batch still carries its scan's size
+    estimate, so building the winner fetch launches no Spark job (no
+    measuring count before the merge) and the plan broadcasts the winning
+    offsets."""
+    import re
+    import time
+
+    from adsimportpipeline_spark.datagen import GenSpec, write_change_log
+    from adsimportpipeline_spark.operators.lww import lww_winner_rows
+    from adsimportpipeline_spark.sources.changelog import stream_change_log
+
+    log = str(tmp_path / "log")
+    write_change_log(spark, log, GenSpec(n_events=400, n_urls=60, seed=5), n_files=4)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    seen: list[dict] = []
+
+    def probe(batch, batch_id):
+        props = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+        saved = [sc.getLocalProperty(k) for k in props]
+        build, check = f"lww-build-{batch_id}", f"lww-check-{batch_id}"
+        try:
+            sc.setJobGroup(build, "build the winner fetch")
+            out = lww_winner_rows(batch, unique_order_col="log_offset")
+            plan = sc._jvm.PythonSQLUtils.explainString(out._jdf.queryExecution(), "simple")
+            sc.setJobGroup(check, "a job that must be seen")
+            batch.count()
+            # the listener bus is ordered: once the later job is visible,
+            # any job of the build group is visible too
+            deadline = time.time() + 30
+            while not tracker.getJobIdsForGroup(check) and time.time() < deadline:
+                time.sleep(0.05)
+            seen.append({
+                "build_jobs": list(tracker.getJobIdsForGroup(build)),
+                "check_jobs": list(tracker.getJobIdsForGroup(check)),
+                "plan": plan,
+            })
+        finally:
+            for k, v in zip(props, saved):
+                sc.setLocalProperty(k, v)
+
+    q = (
+        stream_change_log(spark, log, 2)
+        .writeStream.foreachBatch(probe)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert seen
+    for s in seen:
+        assert s["check_jobs"], "the job-group probe saw no job at all"
+        assert s["build_jobs"] == [], f"building the winner fetch ran jobs {s['build_jobs']}"
+        assert re.search(r"BroadcastHashJoin \[log_offset#\d+L\]", s["plan"]), s["plan"][:2500]
 
 
 def test_read_range_pushes_exact_predicate_to_scan(spark, tmp_path):
