@@ -71,6 +71,10 @@ from .operators.lww import lww_dedup_semi  # noqa: F401
 #: an equal (url, warc_ts, log_offset) the lower tag sorts first and wins.
 KIND_STORED, KIND_DELETE, KIND_UPSERT = 0, 1, 2
 
+#: every this-many batch ids, ``apply_batch`` folds the tombstone and
+#: lineage append branches (batch ids ending the period, ``id % 32 == 31``)
+COMPACT_APPENDS_EVERY = 32
+
 
 def pages_schema_for(batch_schema: T.StructType) -> T.StructType:
     """Target row schema for a change-event schema: drop ``op``, add ``text``
@@ -130,12 +134,10 @@ def _first_per_key(key: str, out_cols: list[str]):
 def _merged_rows(
     table: LakeTable,
     m: dict,
-    resolved: DataFrame,
+    batch_df: DataFrame,
     touched: list[int],
     evolved: T.StructType,
     salted: bool,
-    n_salts: int,
-    with_tombstones: bool,
 ) -> DataFrame:
     """The rows the touched buckets hold after this batch, tagged with
     ``_kind`` (stored or applied upsert), shuffled by ``_bucket``: batch
@@ -150,15 +152,15 @@ def _merged_rows(
         return align_to_schema(df.withColumn("_kind", kind.cast("byte")), mschema)
 
     if salted:
-        winners = lww_dedup_salted(resolved, key, n_salts=n_salts)
+        winners = lww_dedup_salted(batch_df, key)
     else:
-        winners = lww_winner_rows(resolved, key, unique_order_col="log_offset")
+        winners = lww_winner_rows(batch_df, key, unique_order_col="log_offset")
     # a NULL op is no upsert: like a delete it replaces, and emits nothing
     parts = [tagged(winners, F.when(F.col("op") != OP_DELETE, KIND_UPSERT)
                     .otherwise(KIND_DELETE))]
     if any(m["buckets"].get(str(b)) for b in touched):
         parts.append(tagged(table.read_buckets(touched, m), F.lit(KIND_STORED)))
-    if with_tombstones and m["tombstone_files"]:
+    if m["tombstone_files"]:
         tombs = table.read_tombstones(TOMBSTONE_SCHEMA, m).withColumnRenamed("url", key)
         if len(touched) < nb:
             tombs = tombs.filter(bucket_expr(key, nb).isin(touched))
@@ -173,7 +175,7 @@ def _merged_rows(
     for p in parts[1:]:
         merged = merged.union(p)
 
-    width = bucket_shuffle_width(resolved.sparkSession, len(touched))
+    width = bucket_shuffle_width(batch_df.sparkSession, len(touched))
     shuffled = (
         merged.withColumn("_bucket", bucket_expr(key, nb))
         .repartition(width, F.col("_bucket"))
@@ -191,22 +193,11 @@ def apply_batch(
     batch_id: int,
     epoch_source: str = "cdc",
     salted: bool = False,
-    n_salts: int = 16,
     prune_buckets: bool = True,
-    compact_appends_every: int = 32,
-    decision_col: str | None = None,
     keep_applied: list | None = None,
 ) -> dict:
     """Apply one micro-batch of change events. Returns stats. Idempotent:
     re-delivery of an already-committed batch_id is a no-op.
-
-    ``decision_col`` names a pre-resolution column (the stateful in-stream
-    LWW operator's ``decision``): only rows marked ``'apply'`` enter the
-    merge, and — because the state store already saw every delete for
-    their urls — the tombstone read is skipped (per-batch tombstone work
-    stays proportional to the batch, not the table's delete history).  The
-    tombstone audit still sees EVERY delete delivery, resolved or not
-    (reference app.py:15-21 appends every delete).
 
     ``keep_applied``: when a list is passed, the merge output is persisted
     (the write job materializes it) and two frames are appended: first the
@@ -218,8 +209,8 @@ def apply_batch(
     the touched buckets hold after the batch, stored rows included: its
     size follows the touched buckets (most of the table for a tail batch
     that touches most buckets), not the batch, so pass ``keep_applied``
-    only when the applied rows are read (the replay runners do so only with
-    an LSH index attached).  Empty when the batch was an epoch no-op
+    only when the applied rows are read (the replay runner does so only
+    with an LSH index attached).  Empty when the batch was an epoch no-op
     (caller falls back to a table read for that crash-recovery case)."""
     if batch_id <= table.last_epoch(epoch_source):
         return {"batch_id": batch_id, "skipped": True}
@@ -238,26 +229,18 @@ def apply_batch(
     # so columnar re-reads from the source beat materializing full rows
     _mark("manifest_read")  # time since t0: the manifest open above
 
-    # pre-resolved mode: only 'apply' rows flow to the merge; the raw
-    # batch is kept for the tombstone audit + lineage stats
-    resolved = (
-        batch_df.filter(F.col(decision_col) == "apply").drop(decision_col)
-        if decision_col
-        else batch_df
-    )
-
     # bucket pruning: which table buckets does this batch touch?  A
-    # narrow url-column scan of the raw batch; a bulk replay touches
+    # narrow url-column scan of the batch; a bulk replay touches
     # every bucket anyway — prune_buckets=False skips the job.
     if prune_buckets:
         touched = [
             r[0]
-            for r in resolved.select(bucket_expr(key, nb).alias("b")).distinct().collect()
+            for r in batch_df.select(bucket_expr(key, nb).alias("b")).distinct().collect()
         ]
     else:
         touched = list(range(nb))
     has_tombs = bool(m["tombstone_files"])
-    evolved = reconcile_schema(table.schema(m), pages_schema_for(resolved.schema))
+    evolved = reconcile_schema(table.schema(m), pages_schema_for(batch_df.schema))
     _mark("dedup_and_touched")
 
     # Passed as a thunk: the merge's driver-side plan construction (the
@@ -265,10 +248,7 @@ def apply_batch(
     # overwrite_buckets' pool thread, overlapping the tombstone/lineage
     # append jobs.
     def new_data() -> DataFrame:
-        merged = _merged_rows(
-            table, m, resolved, touched, evolved, salted, n_salts,
-            with_tombstones=not decision_col,
-        )
+        merged = _merged_rows(table, m, batch_df, touched, evolved, salted)
         if keep_applied is not None:
             merged = merged.persist(StorageLevel.MEMORY_AND_DISK)
             keep_applied.append(
@@ -357,7 +337,7 @@ def apply_batch(
     # absorb one conflict with a fresh re-plan, and if the table is
     # racing that hard this trigger just skips; the next scheduled
     # batch folds everything anyway.
-    if compact_appends_every and batch_id % compact_appends_every == compact_appends_every - 1:
+    if batch_id % COMPACT_APPENDS_EVERY == COMPACT_APPENDS_EVERY - 1:
         try:
             table.compact_appends(retries=1)
         except CommitConflictError:

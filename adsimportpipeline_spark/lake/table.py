@@ -60,6 +60,19 @@ class CommitConflictError(RuntimeError):
     and reclaimed by :meth:`LakeTable.remove_orphans`."""
 
 
+def _retry_on_conflict(attempt, retries: int) -> int:
+    """Run ``attempt()`` — re-read the current snapshot, re-plan, commit —
+    up to ``retries + 1`` times.  A lost CAS re-runs it; the conflict of
+    the last attempt propagates (the losing attempts' data files are
+    orphans until :meth:`LakeTable.remove_orphans`)."""
+    for _ in range(retries):
+        try:
+            return attempt()
+        except CommitConflictError:
+            pass
+    return attempt()
+
+
 def _stat_key(v):
     """JSON-encodable, order-preserving encoding of a column-stat value.
     Timestamps/dates become fixed-width ISO strings (lexicographic order =
@@ -390,11 +403,12 @@ class LakeTable:
             json.loads(m["schemas"][str(m["current_schema_id"])])
         )
 
-    def _read_file_groups(self, m: dict, entries: list[dict]) -> DataFrame | None:
-        """Read heterogeneous-schema file groups aligned to current schema."""
-        if not entries:
-            return None
+    def _read_file_groups(self, m: dict, entries: list[dict]) -> DataFrame:
+        """Read heterogeneous-schema file groups aligned to current schema
+        (an empty frame of that schema when there are none)."""
         target = self.schema(m)
+        if not entries:
+            return self.spark.createDataFrame([], target)
         by_sid: dict[int, list[str]] = {}
         for e in entries:
             by_sid.setdefault(e["schema_id"], []).append(e["path"])
@@ -410,18 +424,12 @@ class LakeTable:
     def read(self, version: int | None = None) -> DataFrame:
         m = self.manifest(version)
         entries = [e for es in m["buckets"].values() for e in es]
-        df = self._read_file_groups(m, entries)
-        if df is None:
-            return self.spark.createDataFrame([], self.schema(m))
-        return df
+        return self._read_file_groups(m, entries)
 
     def read_buckets(self, bucket_ids: list[int], m: dict | None = None) -> DataFrame:
         m = m or self.manifest()
         entries = [e for b in bucket_ids for e in m["buckets"].get(str(b), [])]
-        df = self._read_file_groups(m, entries)
-        if df is None:
-            return self.spark.createDataFrame([], self.schema(m))
-        return df
+        return self._read_file_groups(m, entries)
 
     def read_changes(
         self,
@@ -481,15 +489,15 @@ class LakeTable:
             if m_old["buckets"].get(b) != m_new["buckets"].get(b)
         )
 
-        def _state(m: dict, entries: list[dict]) -> DataFrame:
-            df = self._read_file_groups(m, entries)
-            return df if df is not None else self.spark.createDataFrame([], self.schema(m))
-
         old_df = align_to_schema(
-            _state(m_old, [e for b in changed for e in m_old["buckets"].get(b, [])]),
+            self._read_file_groups(
+                m_old, [e for b in changed for e in m_old["buckets"].get(b, [])]
+            ),
             target,
         )
-        new_df = _state(m_new, [e for b in changed for e in m_new["buckets"].get(b, [])])
+        new_df = self._read_file_groups(
+            m_new, [e for b in changed for e in m_new["buckets"].get(b, [])]
+        )
         cols = [f.name for f in target.fields]
         o = old_df.select(F.col(key).alias("_k"), F.struct(*cols).alias("_pre"))
         n = new_df.select(F.col(key).alias("_k"), F.struct(*cols).alias("_post"))
@@ -626,8 +634,6 @@ class LakeTable:
         m = m or self.manifest()
         kept, _total = self.plan_range(col, lo, hi, m)
         df = self._read_file_groups(m, kept)
-        if df is None:
-            return self.spark.createDataFrame([], self.schema(m))
         dt = df.schema[col].dataType  # lit cast: TIMESTAMP vs _NTZ columns
         if lo is not None:
             df = df.filter(F.col(col) >= F.lit(lo).cast(dt))
@@ -927,18 +933,15 @@ class LakeTable:
         the losing attempt's data files are orphans until
         :meth:`remove_orphans`.  The default stays raise-on-conflict so an
         unexpected race is never silent."""
-        for attempt in range(retries + 1):
+        def attempt() -> int:
             m = self.manifest()
             ids = bucket_ids if bucket_ids is not None else [int(b) for b in m["buckets"]]
-            data = self.read_buckets(ids, m)
-            try:
-                return self.overwrite_buckets(
-                    data, ids, new_schema=self.schema(m), parent_version=m["version"]
-                )
-            except CommitConflictError:
-                if attempt == retries:
-                    raise
-        raise AssertionError("unreachable")
+            return self.overwrite_buckets(
+                self.read_buckets(ids, m), ids,
+                new_schema=self.schema(m), parent_version=m["version"],
+            )
+
+        return _retry_on_conflict(attempt, retries)
 
     def rescale_buckets(self, new_n_buckets: int, retries: int = 0) -> int:
         """Change the table's bucket count — the growth path a 100 TB
@@ -962,7 +965,7 @@ class LakeTable:
         and restarts per-bucket).  This local implementation rewrites in
         one job; the multiplicative property is what makes the same
         operation incremental on a real cluster."""
-        for attempt in range(retries + 1):
+        def attempt() -> int:
             m = self.manifest()
             parent = m["version"]
             data = self.read()
@@ -979,12 +982,9 @@ class LakeTable:
             }
             m["n_buckets"] = int(new_n_buckets)
             m["version"] = parent + 1
-            try:
-                return self._commit_manifest(m, parent_version=parent)
-            except CommitConflictError:
-                if attempt == retries:
-                    raise
-        raise AssertionError("unreachable")
+            return self._commit_manifest(m, parent_version=parent)
+
+        return _retry_on_conflict(attempt, retries)
 
     def compact_appends(self, retries: int = 0) -> int:
         """Fold the append-only tombstone/lineage branches — one file per
@@ -998,7 +998,7 @@ class LakeTable:
         ``retries`` follows :meth:`compact`'s contract: pass 1 from a
         scheduled maintenance job to absorb one lost CAS against a live
         streaming writer; default raises."""
-        for attempt in range(retries + 1):
+        def attempt() -> int:
             m = self.manifest()
             parent = m["version"]
             for branch, tag in (("tombstone_files", "tomb"), ("lineage_files", "lin")):
@@ -1012,12 +1012,17 @@ class LakeTable:
                     for p in self._parquet_files(d)
                 ]
             m["version"] = m["version"] + 1
-            try:
-                return self._commit_manifest(m, parent_version=parent)
-            except CommitConflictError:
-                if attempt == retries:
-                    raise
-        raise AssertionError("unreachable")
+            return self._commit_manifest(m, parent_version=parent)
+
+        return _retry_on_conflict(attempt, retries)
+
+    @staticmethod
+    def _referenced_paths(m: dict) -> set[str]:
+        """The data, tombstone and lineage files manifest ``m`` references."""
+        paths = {e["path"] for es in m["buckets"].values() for e in es}
+        paths.update(e["path"] for e in m["tombstone_files"])
+        paths.update(e["path"] for e in m["lineage_files"])
+        return paths
 
     def expire_snapshots(self, keep_last: int = 2) -> list[int]:
         """Drop manifests older than the newest ``keep_last`` and delete
@@ -1041,20 +1046,10 @@ class LakeTable:
         expired = [v for v in versions if v <= current - keep_last]
         live: set[str] = set()
         for v in retained:
-            m = self.manifest(v)
-            for es in m["buckets"].values():
-                live.update(e["path"] for e in es)
-            live.update(e["path"] for e in m["tombstone_files"])
-            live.update(e["path"] for e in m["lineage_files"])
+            live |= self._referenced_paths(self.manifest(v))
         # referenced-by-expired-only files are garbage
         for v in expired:
-            m = self.manifest(v)
-            dead: set[str] = set()
-            for es in m["buckets"].values():
-                dead.update(e["path"] for e in es)
-            dead.update(e["path"] for e in m["tombstone_files"])
-            dead.update(e["path"] for e in m["lineage_files"])
-            for p in dead - live:
+            for p in self._referenced_paths(self.manifest(v)) - live:
                 try:
                     os.remove(p)
                 except OSError:
@@ -1085,10 +1080,7 @@ class LakeTable:
         for f in os.listdir(mdir):
             if len(f) == 14 and f.startswith("v") and f.endswith(".json") and f[1:9].isdigit():
                 m = self.manifest(int(f[1:9]))
-                for es in m["buckets"].values():
-                    live.update(os.path.realpath(e["path"]) for e in es)
-                live.update(os.path.realpath(e["path"]) for e in m["tombstone_files"])
-                live.update(os.path.realpath(e["path"]) for e in m["lineage_files"])
+                live.update(os.path.realpath(p) for p in self._referenced_paths(m))
         cutoff = _time.time() - older_than_sec
         removed: list[str] = []
         data_root = os.path.join(self.root, "data")

@@ -248,7 +248,18 @@ def _stage_reuse_barrier(df: DataFrame) -> DataFrame:
     With every consumer's below-exchange subtree canonically identical,
     AQE computes the frame's map stage ONCE and every consumer reads the
     reused shuffle output — sharing via shuffle files, with none of the
-    memory-store serialization that makes ``.persist()`` slower here."""
+    memory-store serialization that makes ``.persist()`` slower here.
+
+    The barrier works only while ``monotonically_increasing_id() >= 0``
+    stays non-foldable: Spark 4.1.2 leaves the nondeterministic filter in
+    the plan, but an optimizer that knew the id is non-negative could fold
+    it to ``true`` and drop it, and both rewrites above would come back
+    (the corpus scanned once per consumer class, with the same rows).  ``tests/test_plans.py::test_minhash_pipeline_reuses_shingle_exchange``
+    catches that: it asserts one ``FileScan parquet`` in the executed
+    plan.  The fallback is the persist path that
+    :func:`minhash_dedup_pairs` already has (``cleanup``: the shingle frame
+    is persisted and the caller unpersists it), slower on scan-rooted
+    inputs but independent of the optimizer."""
     return df.where(F.monotonically_increasing_id() >= 0)
 
 

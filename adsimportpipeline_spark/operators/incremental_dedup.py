@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.html import html_to_text
-from ..lake.table import LakeTable, bucket_expr
+from ..lake.table import LakeTable, _retry_on_conflict, bucket_expr
 from ..schema import OP_DELETE
 from .dedup import _banded_buckets, minhash_signatures, word_shingles
 from .lww import lww_dedup_semi
@@ -292,9 +292,7 @@ def compact_lsh_index(
     collapse).  The index's analog of the main table's copy-on-write — run
     it on the compaction schedule, not per batch.  ``retries`` follows
     :meth:`LakeTable.compact`'s contract against a live streaming writer."""
-    from ..lake.table import CommitConflictError
-
-    for attempt in range(retries + 1):
+    def attempt() -> int:
         m = index.manifest()
         ids = [int(b) for b in m["buckets"]]
         live = (
@@ -306,11 +304,8 @@ def compact_lsh_index(
             )
             .distinct()
         )
-        try:
-            return index.overwrite_buckets(
-                live, ids, new_schema=index.schema(m), parent_version=m["version"]
-            )
-        except CommitConflictError:
-            if attempt == retries:
-                raise
-    raise AssertionError("unreachable")
+        return index.overwrite_buckets(
+            live, ids, new_schema=index.schema(m), parent_version=m["version"]
+        )
+
+    return _retry_on_conflict(attempt, retries)

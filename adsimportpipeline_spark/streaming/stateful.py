@@ -1,23 +1,28 @@
-"""Custom stateful streaming operator: in-stream LWW dedup with
+"""Custom stateful streaming operator: in-stream LWW decisions with
 ``applyInPandasWithState``.
 
-The foreachBatch apply path (apply.py) resolves each micro-batch against the
-*stored table* — correct, but every batch pays a table read.  This operator
-keeps the per-url LWW high-water mark ``(warc_ts, log_offset)`` as
-STREAMING STATE instead, so arbitrarily late or duplicated events are
-decided without touching the lake at all: the streaming-native analog of the
-reference's per-record "is this newer than what we have?" check
-(app.py:34-39).  The LWW ordering also subsumes its tombstone resurrection
-guard (app.py:54-67): a post-delete event is 'apply' only if strictly newer
-than the delete, so no separate delete flag is stored.  State is
-checkpointed by Spark, surviving kill-and-resume.
+The operator keeps the per-url LWW high-water mark ``(warc_ts, log_offset)``
+as STREAMING STATE, so arbitrarily late or duplicated events are classified
+without touching the lake: the streaming-native analog of the reference's
+per-record "is this newer than what we have?" check (app.py:34-39).  A
+post-delete event is 'apply' only if strictly newer than the delete, so no
+separate delete flag is stored.  State is checkpointed by Spark, surviving
+kill-and-resume.
 
 Emitted per input event: ``decision`` in {'apply', 'stale', 'duplicate'}.
-A downstream sink can apply only the 'apply' rows (each already strictly
-newer than everything previously seen for that url).
 
-The batch body is pandas-vectorized: one concat + one lexicographic
-cummax per group per micro-batch; no per-row Python.
+The decisions are relative to the events THIS stream has seen, not to the
+table.  A table with history from outside the stream (a preload, a
+backfill, a replay under a new checkpoint) holds rows and tombstones the
+state never saw: an upsert older than a delete applied before the stream
+started is still 'apply' here.  So the decisions cannot stand in for the
+table's tombstones, and the lake's apply path
+(:func:`..apply.apply_batch`) resolves every batch against the stored rows
+and tombstones instead.
+
+The batch body is pandas-vectorized: one concat, one sort by
+``(warc_ts, log_offset)`` and shifted compares per group per micro-batch;
+no per-row Python.
 """
 
 from __future__ import annotations
@@ -59,93 +64,70 @@ DECISION_SCHEMA = T.StructType(
 )
 
 
-def _make_decider(passthrough: list[str]):
-    """Group body parameterized by payload passthrough columns."""
+def _decide_group(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
+    """Group body: classify one url's events of this micro-batch against
+    its state and advance the high-water mark."""
+    url = key[0]
+    has_state = state.exists
+    if has_state:
+        max_ts, max_off = state.get
+    else:
+        max_ts, max_off = 0, 0  # placeholders; never compared below
 
-    def _decide_group(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        url = key[0]
-        has_state = state.exists
-        if has_state:
-            max_ts, max_off = state.get
-        else:
-            max_ts, max_off = 0, 0  # placeholders; never compared below
+    batch = pd.concat(list(pdfs), ignore_index=True)
+    ts_us = batch["warc_ts"].astype("int64") // 1000  # pandas ns -> micros
+    off = batch["log_offset"].astype("int64")
 
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        ts_us = batch["warc_ts"].astype("int64") // 1000  # pandas ns -> micros
-        off = batch["log_offset"].astype("int64")
+    # ascending sort by the LWW key: every row then compares only against
+    # its predecessor (in-batch) and the state's high-water mark
+    keyed = pd.DataFrame({"ts": ts_us, "off": off})
+    order = keyed.sort_values(["ts", "off"], kind="mergesort").index
+    b = batch.loc[order].reset_index(drop=True)
+    bts = keyed["ts"].loc[order].reset_index(drop=True)
+    boff = keyed["off"].loc[order].reset_index(drop=True)
 
-        # ascending sort by the LWW key: every row then compares only against
-        # its predecessor (in-batch) and the state's high-water mark
-        keyed = pd.DataFrame({"ts": ts_us, "off": off})
-        order = keyed.sort_values(["ts", "off"], kind="mergesort").index
-        b = batch.loc[order].reset_index(drop=True)
-        bts = keyed["ts"].loc[order].reset_index(drop=True)
-        boff = keyed["off"].loc[order].reset_index(drop=True)
+    # in-batch exact re-delivery: equal key to the previous (sorted) row
+    dup_in_batch = bts.eq(bts.shift(1)) & boff.eq(boff.shift(1))
+    if has_state:
+        # exact re-delivery of the cross-batch high-water mark
+        dup_vs_state = (bts == max_ts) & (boff == max_off)
+        # strictly newer than everything seen before this row
+        newer_than_state = (bts > max_ts) | (
+            (bts == max_ts) & (boff > max_off)
+        )
+    else:
+        # absence IS the sentinel: a magic (-1, -1) mark would classify
+        # a first-seen pre-1970 timestamp (negative epoch micros) as
+        # 'stale' and silently drop it
+        dup_vs_state = pd.Series(False, index=b.index)
+        newer_than_state = pd.Series(True, index=b.index)
 
-        # in-batch exact re-delivery: equal key to the previous (sorted) row
-        dup_in_batch = bts.eq(bts.shift(1)) & boff.eq(boff.shift(1))
-        if has_state:
-            # exact re-delivery of the cross-batch high-water mark
-            dup_vs_state = (bts == max_ts) & (boff == max_off)
-            # strictly newer than everything seen before this row
-            newer_than_state = (bts > max_ts) | (
-                (bts == max_ts) & (boff > max_off)
-            )
-        else:
-            # absence IS the sentinel: a magic (-1, -1) mark would classify
-            # a first-seen pre-1970 timestamp (negative epoch micros) as
-            # 'stale' and silently drop it
-            dup_vs_state = pd.Series(False, index=b.index)
-            newer_than_state = pd.Series(True, index=b.index)
+    decision = pd.Series("stale", index=b.index)
+    decision[newer_than_state.to_numpy()] = "apply"
+    decision[(dup_in_batch | dup_vs_state).to_numpy()] = "duplicate"
 
-        decision = pd.Series("stale", index=b.index)
-        decision[newer_than_state.to_numpy()] = "apply"
-        decision[(dup_in_batch | dup_vs_state).to_numpy()] = "duplicate"
+    new_ts, new_off = int(bts.iloc[-1]), int(boff.iloc[-1])
+    if not has_state or (new_ts, new_off) > (max_ts, max_off):
+        state.update((new_ts, new_off))
 
-        new_ts, new_off = int(bts.iloc[-1]), int(boff.iloc[-1])
-        if not has_state or (new_ts, new_off) > (max_ts, max_off):
-            state.update((new_ts, new_off))
-
-        out = {
-            "url": url,
-            "warc_ts": b["warc_ts"],
-            "log_offset": b["log_offset"],
-            "op": b["op"],
-            "decision": decision,
-        }
-        for c in passthrough:
-            out[c] = b[c]
-        yield pd.DataFrame(out)
-
-    return _decide_group
+    yield pd.DataFrame({
+        "url": url,
+        "warc_ts": b["warc_ts"],
+        "log_offset": b["log_offset"],
+        "op": b["op"],
+        "decision": decision,
+    })
 
 
-def stateful_lww_decisions(
-    events: DataFrame, passthrough_payload: bool = False
-) -> DataFrame:
+def stateful_lww_decisions(events: DataFrame) -> DataFrame:
     """Streaming transform: change events -> per-event LWW decisions with
     per-url state (exact semantics: an event is 'apply' iff strictly newer
     than every event for its url seen in any earlier batch OR earlier in
-    this batch's order).
-
-    ``passthrough_payload=True`` carries every other input column through
-    the state operator unchanged, so a downstream sink can apply the
-    'apply' rows directly (the full state-store replay mode,
-    :func:`..streaming.runner.run_replay_stateful`) instead of re-joining
-    payloads."""
+    this batch's order)."""
     core = ["url", "warc_ts", "log_offset", "op"]
-    extra = (
-        [f for f in events.schema.fields if f.name not in core]
-        if passthrough_payload
-        else []
-    )
-    out_schema = T.StructType(
-        list(DECISION_SCHEMA.fields) + [T.StructField(f.name, f.dataType, True) for f in extra]
-    )
-    src = events if passthrough_payload else events.select(*core)
-    return src.groupBy("url").applyInPandasWithState(
-        _make_decider([f.name for f in extra]),
-        outputStructType=out_schema,
+    return events.select(*core).groupBy("url").applyInPandasWithState(
+        _decide_group,
+        outputStructType=DECISION_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,

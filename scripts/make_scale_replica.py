@@ -66,16 +66,27 @@ def main() -> None:
         print(f"{name}: {tbl.num_rows} rows")
 
     F = args.factor
-    for name in ("region", "nation"):
-        dump(name, load(name))
-
-    # key spans derived from the data (max+1), not hard-coded
-    spans = {}
+    # key spans derived from the data (max+1), not hard-coded; each table
+    # is read once and reused below
+    spans, tables = {}, {}
     for name, key in (("customer", "c_custkey"), ("orders", "o_orderkey"),
                       ("part", "p_partkey"), ("supplier", "s_suppkey"),
                       ("events", "event_id"), ("documents", "doc_id"),
                       ("embeddings", "vec_id")):
-        spans[key] = pc.max(load(name)[key]).as_py() + 1
+        tables[name] = load(name)
+        spans[key] = pc.max(tables[name][key]).as_py() + 1
+    tables["lineitem"] = load("lineitem")
+    # events' user_id cycles within the ORIGINAL customer key range, so
+    # every replica's user ids must fit in it
+    n_users = pc.max(tables["events"]["user_id"]).as_py() + 1
+    if F * n_users > spans["c_custkey"]:
+        raise SystemExit(
+            f"{F} replicas of {n_users} user ids overrun the customer key "
+            f"span {spans['c_custkey']}; use a smaller --factor"
+        )
+
+    for name in ("region", "nation"):
+        dump(name, load(name))
 
     plans = {
         "customer": {"c_custkey": spans["c_custkey"]},
@@ -86,12 +97,11 @@ def main() -> None:
                      "l_suppkey": spans["s_suppkey"]},
     }
     for name, cols in plans.items():
-        base = load(name)
+        base = tables[name]
         dump(name, pa.concat_tables([_offsets(base, cols, r) for r in range(F)]))
 
     # events: user_id cycles within the ORIGINAL customer key range
-    ev = load(name="events")
-    n_users = pc.max(ev["user_id"]).as_py() + 1
+    ev = tables["events"]
     reps = []
     for r in range(F):
         t = _offsets(ev, {"event_id": spans["event_id"]}, r)
@@ -102,7 +112,7 @@ def main() -> None:
     dump("events", pa.concat_tables(reps))
 
     # documents: word-suffix tagging kills cross-replica shingle collisions
-    docs = load("documents")
+    docs = tables["documents"]
     texts = docs["text"].to_pylist()
     reps = [docs]
     for r in range(1, F):
@@ -114,7 +124,7 @@ def main() -> None:
     dump("documents", pa.concat_tables(reps))
 
     # embeddings: fresh seeded isotropic unit vectors per replica
-    emb = load("embeddings")
+    emb = tables["embeddings"]
     n, dim = emb.num_rows, len(emb["embedding"][0])
     reps = [emb]
     for r in range(1, F):

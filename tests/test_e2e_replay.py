@@ -258,3 +258,39 @@ def test_rescale_mid_replay_matches_oracle(spark, tmp_path, events_and_oracle):
     assert apply_batch(
         table, df.filter(df.log_offset < step), batch_id=1)["skipped"]
     assert table.current_version() == v
+
+
+def test_preloaded_table_then_streamed_tail(spark, tmp_path):
+    """A table with history from outside the stream: a preload batch
+    inserts urls u and v, then deletes u; the streamed tail carries an
+    upsert of u OLDER than that delete and a newer upsert of v.  The stream
+    never saw the delete, so only the stored tombstone can block u's stale
+    upsert: the final table must equal the oracle over all events, with u
+    absent and v at its new offset."""
+    from datetime import datetime
+
+    from adsimportpipeline_spark.schema import CHANGE_EVENT_SCHEMA
+
+    def ev(url, hour, offset, op):
+        html = None if op == "delete" else f"<p>{url} at {offset}</p>".encode()
+        return {"url": url, "warc_ts": datetime(2024, 1, 1, hour), "log_offset": offset,
+                "op": op, "html": html, "lang": "en", "source_origin": "crawl",
+                "fingerprint": None}
+
+    def frame(events):
+        return spark.createDataFrame(
+            [[e[f] for f in CHANGE_EVENT_SCHEMA.names] for e in events], CHANGE_EVENT_SCHEMA
+        )
+
+    preload = [ev("u", 1, 0, "insert"), ev("v", 1, 1, "insert"), ev("u", 3, 2, "delete")]
+    tail = [ev("u", 2, 3, "update"), ev("v", 4, 4, "update")]
+    root = str(tmp_path / "tbl")
+    table = LakeTable.create(spark, root, PAGES_SCHEMA, n_buckets=4)
+    apply_batch(table, frame(preload), batch_id=0, epoch_source="preload")
+    log = str(tmp_path / "log")
+    frame(tail).coalesce(1).write.parquet(log)
+    run_replay(spark, log, root, str(tmp_path / "ckpt"))
+
+    pages, tombs = replay_oracle(preload + tail)
+    assert set(pages) == {"v"} and pages["v"]["log_offset"] == 4
+    _assert_state_matches(table, pages, tombs)
